@@ -1,11 +1,11 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.sources.fits.RefFixtures
 
 class MultimodalSpec extends SparkTestBase {
 
-  private val imgFixture =
-    "/root/reference/src/test/resources/dirIm/0_i_am_not_empty.fits"
+  private val imgFixture = s"${RefFixtures.root}/dirIm/0_i_am_not_empty.fits"
 
   test("FITS image lines round-trip through the media model (real path)") {
     val media = Multimodal.fitsImagesAsMedia(spark, imgFixture, hdu = 2)

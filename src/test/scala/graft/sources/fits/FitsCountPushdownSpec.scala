@@ -4,7 +4,7 @@ import graft.SparkTestBase
 
 class FitsCountPushdownSpec extends SparkTestBase {
 
-  private val res = "/root/reference/src/test/resources"
+  private val res = RefFixtures.root
 
   test("COUNT(*) is answered from metadata without scanning data") {
     val df = spark.read.format("fits").option("hdu", 1)

@@ -167,7 +167,7 @@ class FitsCutoutSpec extends SparkTestBase {
   }
 
   test("bintable scans never carry a line range") {
-    val res = "/root/reference/src/test/resources"
+    val res = RefFixtures.root
     val df = spark.read.format("fits").option("hdu", 1)
       .load(s"$res/test_file.fits").filter(col("Index") < 100)
     assert(!planOf(df).contains("lines="), planOf(df))

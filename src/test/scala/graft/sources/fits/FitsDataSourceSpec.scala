@@ -8,12 +8,13 @@ import graft.SparkTestBase
 
 /** End-to-end DataFrame tests for the FITS DSv2 connector, porting the
   * reference's golden values (packageTest.scala:105-262,
-  * ReadFitsTest.scala:65-316) as compatibility tests. Fixtures are the
-  * reference's committed binaries, read-only.
+  * ReadFitsTest.scala:65-316) as compatibility tests. Fixtures come from
+  * [[RefFixtures]]: the reference's committed binaries, or byte-exact
+  * rebuilds of them.
   */
 class FitsDataSourceSpec extends SparkTestBase {
 
-  private val res = "/root/reference/src/test/resources"
+  private val res = RefFixtures.root
   private def fits(path: String, hdu: Int = 1,
       opts: Map[String, String] = Map.empty): DataFrame = {
     val r = spark.read.format("fits").option("hdu", hdu)
@@ -134,7 +135,8 @@ class FitsDataSourceSpec extends SparkTestBase {
   }
 
   test("ASCII TABLE HDU decodes (reference fixture goldens)") {
-    val df = fits(s"$res/dirIm/0_i_am_not_empty.fits", hdu = 1)
+    val df =
+      fits(RefFixtures.reference("dirIm/0_i_am_not_empty.fits"), hdu = 1)
     assert(df.count() == 53L)
     val rows = df.collect()
     // golden row "Object  1" (values verified against the raw bytes)
@@ -185,16 +187,15 @@ class FitsDataSourceSpec extends SparkTestBase {
   }
 
   test("hdu option resolves EXTNAME (astropy-style), case-insensitive") {
-    val byIndex = spark.read.format("fits").option("hdu", 1)
-      .load(s"$res/toTest/swift_events.fits")
-    val byName = spark.read.format("fits").option("hdu", "events")
-      .load(s"$res/toTest/swift_events.fits")
+    val swift = RefFixtures.reference("toTest/swift_events.fits")
+    val byIndex = spark.read.format("fits").option("hdu", 1).load(swift)
+    val byName = spark.read.format("fits").option("hdu", "events").load(swift)
     assert(byName.schema == byIndex.schema)
     assert(byName.count() == byIndex.count())
     // missing name errors eagerly with the available names listed
     val e = intercept[IllegalArgumentException] {
       spark.read.format("fits").option("hdu", "nope")
-        .load(s"$res/toTest/swift_events.fits").schema
+        .load(swift).schema
     }
     assert(e.getMessage.contains("EXTNAME") &&
       e.getMessage.contains("EVENTS"), e.getMessage)

@@ -8,7 +8,7 @@ import graft.SparkTestBase
   */
 class FitsEmptyMixSpec extends SparkTestBase {
 
-  private val dirIm = "/root/reference/src/test/resources/dirIm"
+  private val dirIm = s"${RefFixtures.root}/dirIm"
 
   test("PERMISSIVE: empty-HDU file is skipped, image rows survive") {
     val df = spark.read.format("fits").option("hdu", 2).load(dirIm)

@@ -16,7 +16,9 @@ import graft.sources.fits.core.{FitsStructure, HduMeta}
   */
 class FitsExoticCorpusSpec extends SparkTestBase {
 
-  private val corpus = new File("/root/reference/src/test/resources/toTest")
+  /** The corpus files; cancels the calling test where the reference's
+    * toTest/ directory is absent (its files cannot be rebuilt). */
+  private def corpus = new File(RefFixtures.reference("toTest"))
     .listFiles().filter(_.getName.endsWith(".fits")).sortBy(_.getName)
 
   test("every corpus file structure-scans with consistent boundaries") {

@@ -109,7 +109,7 @@ class FitsVarLengthSpec extends SparkTestBase {
 
   test("reference varitab.fits fixture decodes through the full source") {
     val df = spark.read.format("fits").option("hdu", 1)
-      .load("/root/reference/src/test/resources/toTest/varitab.fits")
+      .load(RefFixtures.reference("toTest/varitab.fits"))
     assert(df.schema.map(f => (f.name, f.dataType.simpleString)) == Seq(
       "Avalue" -> "string", "Lvalue" -> "array<boolean>",
       "Xvalue" -> "array<tinyint>", "Bvalue" -> "array<tinyint>",

@@ -5,15 +5,18 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.fits.RefFixtures
+
 /** Byte-layer unit tests with golden values taken from the reference's
-  * own fixtures/tests (FitsLibTest.scala goldens; fixtures under
-  * /root/reference/src/test/resources — used as read-only test inputs).
+  * own fixtures/tests (FitsLibTest.scala goldens; fixtures from
+  * [[RefFixtures]] — the reference's files, or byte-exact rebuilds).
   */
 class FitsCoreSpec extends AnyFunSuite {
 
-  private val res = "/root/reference/src/test/resources"
-  private def scan(p: String) = {
-    val path = new Path(s"file://$res/$p")
+  private val res = RefFixtures.root
+  private def scan(p: String) = scanFile(s"$res/$p")
+  private def scanFile(f: String) = {
+    val path = new Path(s"file://$f")
     FitsStructure.scan(path.getFileSystem(new Configuration()), path)
   }
 
@@ -138,7 +141,7 @@ class FitsCoreSpec extends AnyFunSuite {
   }
 
   test("empty primary HDU is opaque; ASCII TABLE resolves its columns") {
-    val hdus = scan("dirIm/0_i_am_not_empty.fits")
+    val hdus = scanFile(RefFixtures.reference("dirIm/0_i_am_not_empty.fits"))
     assert(hdus(0).meta == HduMeta.Opaque) // empty primary
     val t = hdus(1).meta.asInstanceOf[HduMeta.Bintable] // ASCII TABLE
     assert(t.isReadable && t.nRows == 53 && t.rowBytes == 59)
@@ -152,7 +155,7 @@ class FitsCoreSpec extends AnyFunSuite {
   }
 
   test("primary HDU with data is assumed to be an image") {
-    val hdus = scan("toTest/tst0001.fits")
+    val hdus = scanFile(RefFixtures.reference("toTest/tst0001.fits"))
     val img = hdus(0).meta.asInstanceOf[HduMeta.Image]
     assert(img.axes == Vector(123L, 321L))
     assert(img.elem == ElemType.B) // BITPIX 8
@@ -201,7 +204,7 @@ class FitsCoreSpec extends AnyFunSuite {
   }
 
   test("variable-length array file walks without desync (PCOUNT heap)") {
-    val hdus = scan("toTest/varitab.fits")
+    val hdus = scanFile(RefFixtures.reference("toTest/varitab.fits"))
     assert(hdus.nonEmpty)
     // boundaries must be monotonically increasing and block-aligned
     hdus.foreach { h =>

@@ -345,6 +345,7 @@ object Bench {
     operators.Dedup.evictMemo(spark)
     operators.Similarity.evictMemo(spark)
     operators.Relational.evictBucketMemo(spark)
+    Tables.evictMemo(spark)
     // FITS scan throughput vs the reference's measured 16 MB/s/task
     // baseline (BASELINE.md row 1) — the connector is the engine's
     // core, so its number belongs in the bench artifact.

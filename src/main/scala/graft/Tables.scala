@@ -30,7 +30,7 @@ object Tables {
     * mid-session at the same path must not go through this memo —
     * scratch round-trip dirs (fitsScratch) read via spark.read
     * directly, as before. */
-  private val resolvedMemo = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val resolvedMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
 
   // get-then-putIfAbsent, NOT computeIfAbsent: loading "events" nests a
@@ -46,6 +46,15 @@ object Tables {
       resolvedMemo.putIfAbsent(key, resolve)
       resolvedMemo.get(key)
     }
+  }
+
+  /** Drops this session's resolved frames (the memo holds strong
+    * session keys and never shrinks on its own — same hygiene as
+    * operators.Similarity.evictMemo). */
+  def evictMemo(s: SparkSession): Unit = {
+    import scala.jdk.CollectionConverters._
+    resolvedMemo.keySet.asScala.filter(_._1 eq s).toList
+      .foreach(resolvedMemo.remove)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

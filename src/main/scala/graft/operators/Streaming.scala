@@ -90,10 +90,17 @@ object Streaming {
     * per partition per batch for stores that hold almost nothing
     * (measured 40-55% of several keys' wall time, r17; 16 and 32
     * re-measured worse in r18, 4 re-measured ≈ flat-to-worse in r19).
-    * A production deployment sets the knob to its state volume. */
-  private def statePartitions(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(8)
+    * A production deployment sets the knob to its state volume. A
+    * value that is not a positive integer fails here, naming the key,
+    * before the replay starts. */
+  private def statePartitions(s: SparkSession): Int = {
+    val key = "spark.graft.stream.statePartitions"
+    s.conf.getOption(key).fold(8) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$key must be a positive integer, got '$v'"))
+    }
+  }
 
   /** Runs `f` with the session's shuffle-partition count (= stateful
     * operators' state-partition count, fixed at first checkpoint)

@@ -3,20 +3,24 @@ package graft.sources.fits
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.sources.fits.core._
 
-/** Vectorized FITS reader: decodes rows straight into
+/** The FITS scan's reader: decodes rows straight into
   * OnHeapColumnVectors, 4096 rows per ColumnarBatch (SURVEY §7 step 10
   * — the scan feeds whole-stage codegen through ColumnarToRow exactly
   * like Spark's vectorized parquet reader, skipping per-row
-  * InternalRow materialization). Fixed-width columns decode from the
-  * chunk buffer; variable-length (P/Q) columns and compressed-image
-  * tiles resolve their heap payloads through a per-chunk coalesced
-  * heap window (per-row pread fallback).
+  * InternalRow materialization). Every HDU shape and column form takes
+  * this one path. Fixed-width columns decode from the chunk buffer;
+  * TDIM columns fill nested child vectors; variable-length (P/Q)
+  * columns and compressed-image tiles resolve their heap payloads
+  * through a per-chunk coalesced heap window (per-row pread fallback).
+  * A projection with no data column (a metadata-only or constant
+  * select) emits batches that carry only a row count and reads no
+  * data bytes.
   *
   * Strings are trimmed at the byte level (code points ≤ U+0020 are
   * single bytes in UTF-8, so byte-trim ≡ String.trim) with no
@@ -67,10 +71,6 @@ final class FitsColumnarReader(part: FitsInputPartition,
     case _ =>
       math.min(4096L, math.min(chunkRowsMax.toLong, part.numRows)).toInt.max(1)
   }
-  private val buf = new Array[Byte](chunkRowsMax * rowBytes)
-  private var chunkStartRow = 0L // absolute row index of buf(0)
-  private var chunkRows = 0 // valid rows in buf
-
   private val schema: StructType = part.spec match {
     case DecodeSpec.Bintable(cs, _) =>
       StructType(cs.map(c => org.apache.spark.sql.types.StructField(
@@ -90,10 +90,15 @@ final class FitsColumnarReader(part: FitsInputPartition,
           org.apache.spark.sql.types.LongType, true)
       }.toSeq)
   }
+  // no data column ⇒ no data read, so no chunk buffer either
+  private val buf =
+    new Array[Byte](if (schema.isEmpty) 0 else chunkRowsMax * rowBytes)
+  private var chunkStartRow = 0L // absolute row index of buf(0)
+  private var chunkRows = 0 // valid rows in buf
 
   // -------------------------------------- tile-compressed image support
   // (descriptor rows in `buf`, tile payloads via the coalesced heap
-  // window — same IO shape as the row reader, decode into vectors)
+  // window, decode into vectors)
 
   private val compMeta: HduMeta.CompImage = part.spec match {
     case DecodeSpec.CompImage(m, _, _, _) => m
@@ -150,8 +155,8 @@ final class FitsColumnarReader(part: FitsInputPartition,
   private var heapLen = 0L
 
   /** One pass over the chunk's descriptors → union heap span, read once
-    * (mirrors FitsPartitionReader.fill; tiles written sequentially
-    * reference a near-contiguous span). */
+    * (rows and tiles written sequentially reference a near-contiguous
+    * span). */
   private def coalesceHeap(): Unit = {
     heapLen = 0L
     if (varCols.isEmpty || heapStart < 0) return
@@ -201,6 +206,13 @@ final class FitsColumnarReader(part: FitsInputPartition,
 
   private def nextRows(): Boolean = {
     if (emitted >= part.numRows) return false
+    if (vectors.isEmpty) {
+      // no data column: the batch carries a row count only
+      val n = math.min(batchRows.toLong, part.numRows - emitted).toInt
+      batch.setNumRows(n)
+      emitted += n
+      return true
+    }
     if (emitted >= chunkStartRow + chunkRows) {
       chunkStartRow = emitted
       chunkRows = math.min(chunkRowsMax.toLong, part.numRows - emitted).toInt
@@ -295,7 +307,7 @@ final class FitsColumnarReader(part: FitsInputPartition,
   /** BLANK-sentinel integer image element: NULL on the sentinel, else
     * the (possibly scaled) value, unboxed. */
   @inline private def putBlanked(be: ElemType.BlankElem,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
+      v: WritableColumnVector,
       idx: Int, o: Int, src: Array[Byte] = buf): Unit =
     if (be.isBlankAt(src, o)) v.putNull(idx)
     else be.inner match {
@@ -395,7 +407,7 @@ final class FitsColumnarReader(part: FitsInputPartition,
       // decompresses (nor preads its payload, nor generates its dither
       // stream) — fillCompLines skips it symmetrically
       if (tileSelected(tc)) {
-        tiles(tc) = FitsPartitionReader.compTileBytes(m, buf,
+        tiles(tc) = TileCodec.compTileBytes(m, buf,
           (rowBase + tc) * rowBytes, heapBuf, heapBase, heapLen, in,
           heapStart, tw * bandH)
         m.quant.foreach { q =>
@@ -542,7 +554,7 @@ final class FitsColumnarReader(part: FitsInputPartition,
   /** BSCALE/TSCAL-scaled element into a column vector, unboxed (the
     * primitive-typed decoders on ScaledElem exist for exactly this). */
   @inline private def putScaled(se: ElemType.ScaledElem,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
+      v: WritableColumnVector,
       idx: Int, o: Int, src: Array[Byte] = buf): Unit =
     se.sparkType match {
       case org.apache.spark.sql.types.ByteType =>
@@ -601,47 +613,10 @@ final class FitsColumnarReader(part: FitsInputPartition,
             s"scaled element $e inside a raw Scalar — TForm.scaled wraps " +
               "at the TForm level (TForm.Scaled), never inside Scalar")
         }
-      case wn: TForm.WithNull =>
-        // TNULL sentinel scalars/vectors: compare the stored integer,
-        // putNull on hit (element-wise for vectors)
-        val s = wn.sentinel
-        @inline def putElem(vec: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-            idx: Int, elem: ElemType, o: Int): Unit = elem match {
-          case ElemType.B =>
-            // unsigned FITS byte: sentinel is the stored 0-255 value
-            val x = buf(o)
-            if ((x & 0xff).toLong == s) vec.putNull(idx) else vec.putByte(idx, x)
-          case ElemType.I =>
-            val x = ElemType.s16(buf, o)
-            if (x.toLong == s) vec.putNull(idx) else vec.putShort(idx, x)
-          case ElemType.J =>
-            val x = i32(o)
-            if (x.toLong == s) vec.putNull(idx) else vec.putInt(idx, x)
-          case ElemType.K =>
-            val x = i64(o)
-            if (x == s) vec.putNull(idx) else vec.putLong(idx, x)
-          case other => throw new IllegalStateException(
-            s"TNULL on non-integer element $other")
-        }
-        (wn.inner: @unchecked) match {
-          case TForm.Scalar(_, elem) =>
-            var r = 0
-            while (r < n) { putElem(v, r, elem, r * rowBytes + off); r += 1 }
-          case TForm.Vec(_, elem, repeat) =>
-            val child = v.arrayData()
-            child.reserve(n * repeat)
-            val w = elem.width
-            var r = 0
-            while (r < n) {
-              val rowOff = off + r * rowBytes
-              var j = 0
-              while (j < repeat) {
-                putElem(child, r * repeat + j, elem, rowOff + j * w)
-                j += 1
-              }
-              v.putArray(r, r * repeat, repeat)
-              r += 1
-            }
+      case TForm.WithNull(TForm.Scalar(_, elem), sentinel) =>
+        var r = 0
+        while (r < n) {
+          putNullable(v, r, elem, r * rowBytes + off, sentinel); r += 1
         }
       case x: TForm.Bits =>
         // bit field: one raw byte blob per row inside a 1-element array
@@ -670,40 +645,6 @@ final class FitsColumnarReader(part: FitsInputPartition,
           }
           r += 1
         }
-      case TForm.Vec(_, elem, repeat) =>
-        val child = v.arrayData()
-        child.reserve(n * repeat)
-        val w = elem.width
-        var r = 0
-        while (r < n) {
-          val rowOff = off + r * rowBytes
-          var j = 0
-          while (j < repeat) {
-            val o = rowOff + j * w
-            val idx = r * repeat + j
-            elem match {
-              case ElemType.L => buf(o) match {
-                case 'T' => child.putBoolean(idx, true)
-                case 'F' => child.putBoolean(idx, false)
-                case _ => child.putNull(idx) // undefined logical
-              }
-              case ElemType.B => child.putByte(idx, buf(o))
-              case ElemType.I => child.putShort(idx, ElemType.s16(buf, o))
-              case ElemType.J => child.putInt(idx, i32(o))
-              case ElemType.K => child.putLong(idx, i64(o))
-              case ElemType.E =>
-                child.putFloat(idx, java.lang.Float.intBitsToFloat(i32(o)))
-              case ElemType.D =>
-                child.putDouble(idx, java.lang.Double.longBitsToDouble(i64(o)))
-              case e @ (_: ElemType.ScaledElem | _: ElemType.BlankElem) =>
-            throw new IllegalStateException(
-                s"scaled element $e cannot take the vectorized path")
-            }
-            j += 1
-          }
-          v.putArray(r, r * repeat, repeat)
-          r += 1
-        }
       case TForm.Str(_, len) =>
         var r = 0
         while (r < n) {
@@ -719,21 +660,21 @@ final class FitsColumnarReader(part: FitsInputPartition,
       case sc: TForm.Scaled if !sc.isArray =>
         var r = 0
         while (r < n) { putScaled(sc.element, v, r, r * rowBytes + off); r += 1 }
-      case sc: TForm.Scaled =>
-        val child = v.arrayData()
-        val repeat = sc.repeat
-        child.reserve(n * repeat)
-        val w = sc.element.width
-        var r = 0
-        while (r < n) {
-          val rowOff = off + r * rowBytes
-          var j = 0
-          while (j < repeat) {
-            putScaled(sc.element, child, r * repeat + j, rowOff + j * w)
-            j += 1
-          }
-          v.putArray(r, r * repeat, repeat)
-          r += 1
+      case _: TForm.Vec | _: TForm.Scaled | _: TForm.WithNull =>
+        putRuns(v, n, fillVecElems(col.tform, v.arrayData(), off, n))
+      case m: TForm.Md =>
+        // TDIM: the flat elements fill the innermost vector exactly as
+        // a plain vector column's do; each nesting level above then
+        // holds fixed-length runs, first axis (d1) innermost
+        val k = m.dims.length
+        val levels = Iterator.iterate(v: WritableColumnVector)(_.arrayData())
+          .take(k + 1).toArray
+        var count = n * fillVecElems(m.inner, levels(k), off, n)
+        var i = 0
+        while (i < k) {
+          count /= m.dims(i)
+          putRuns(levels(k - 1 - i), count, m.dims(i))
+          i += 1
         }
       case va: TForm.VarArr if va.degraded =>
         // heap truncated (FitsStructure.degradeVarCols): NULL out
@@ -743,7 +684,7 @@ final class FitsColumnarReader(part: FitsInputPartition,
         // heap indirection, vectorized: descriptors in the chunk rows,
         // payloads from the coalesced heap window (per-row pread
         // fallback), strings copied byte-exact (no trim — heap lengths
-        // are exact, FitsPartitionReader.decodeVar), arrays appended at
+        // are exact, unlike blank-padded nA fields), arrays appended at
         // a running child offset since rows have ragged lengths
         val child = if (va.isString) null else v.arrayData()
         val w = va.elem.width
@@ -752,11 +693,11 @@ final class FitsColumnarReader(part: FitsInputPartition,
         while (r < n) {
           val (n0, hoff) = va.descriptor(buf, r * rowBytes + off)
           if (n0 < 0 || n0 > va.maxLen ||
-            n0 * w > FitsPartitionReader.MaxVarElement)
+            n0 * w > TileCodec.MaxVarElement)
             throw new IllegalArgumentException(
               s"corrupt variable-length descriptor in '${col.name}': " +
                 s"count $n0 outside [0, ${va.maxLen}] or element over " +
-                s"${FitsPartitionReader.MaxVarElement} bytes")
+                s"${TileCodec.MaxVarElement} bytes")
           val count = n0.toInt
           val payload = count * w
           var src: Array[Byte] = heapBuf
@@ -805,6 +746,107 @@ final class FitsColumnarReader(part: FitsInputPartition,
         var r = 0
         while (r < n) { v.putNull(r); r += 1 }
     }
+  }
+
+  /** Fills `n` rows of a fixed-repeat vector form — plain, TSCAL/TZERO-
+    * scaled or TNULL-bearing — flat into element vector `child`: row
+    * r's element j lands at r·repeat + j. Returns the repeat; the
+    * caller sets the array runs (one level for a vector column, every
+    * nesting level for a TDIM column). */
+  private def fillVecElems(t: TForm, child: WritableColumnVector,
+      off: Int, n: Int): Int = t match {
+    case TForm.Vec(_, elem, repeat) =>
+      child.reserve(n * repeat)
+      val w = elem.width
+      var r = 0
+      while (r < n) {
+        val rowOff = off + r * rowBytes
+        var j = 0
+        while (j < repeat) {
+          val o = rowOff + j * w
+          val idx = r * repeat + j
+          elem match {
+            case ElemType.L => buf(o) match {
+              case 'T' => child.putBoolean(idx, true)
+              case 'F' => child.putBoolean(idx, false)
+              case _ => child.putNull(idx) // undefined logical
+            }
+            case ElemType.B => child.putByte(idx, buf(o))
+            case ElemType.I => child.putShort(idx, ElemType.s16(buf, o))
+            case ElemType.J => child.putInt(idx, i32(o))
+            case ElemType.K => child.putLong(idx, i64(o))
+            case ElemType.E =>
+              child.putFloat(idx, java.lang.Float.intBitsToFloat(i32(o)))
+            case ElemType.D =>
+              child.putDouble(idx, java.lang.Double.longBitsToDouble(i64(o)))
+            case e @ (_: ElemType.ScaledElem | _: ElemType.BlankElem) =>
+              throw new IllegalStateException(
+                s"scaled element $e cannot take the vectorized path")
+          }
+          j += 1
+        }
+        r += 1
+      }
+      repeat
+    case sc: TForm.Scaled =>
+      val repeat = sc.repeat
+      child.reserve(n * repeat)
+      val w = sc.element.width
+      var r = 0
+      while (r < n) {
+        val rowOff = off + r * rowBytes
+        var j = 0
+        while (j < repeat) {
+          putScaled(sc.element, child, r * repeat + j, rowOff + j * w)
+          j += 1
+        }
+        r += 1
+      }
+      repeat
+    case TForm.WithNull(TForm.Vec(_, elem, repeat), sentinel) =>
+      child.reserve(n * repeat)
+      val w = elem.width
+      var r = 0
+      while (r < n) {
+        val rowOff = off + r * rowBytes
+        var j = 0
+        while (j < repeat) {
+          putNullable(child, r * repeat + j, elem, rowOff + j * w, sentinel)
+          j += 1
+        }
+        r += 1
+      }
+      repeat
+    case other => throw new IllegalStateException(
+      s"$other is not a fixed-repeat vector form")
+  }
+
+  /** `count` arrays of `run` elements each, laid end to end. */
+  private def putRuns(v: WritableColumnVector, count: Int, run: Int): Unit = {
+    v.reserve(count)
+    var i = 0
+    while (i < count) { v.putArray(i, i * run, run); i += 1 }
+  }
+
+  /** TNULL sentinel integer element: NULL when the stored value equals
+    * the sentinel, else the value. */
+  @inline private def putNullable(v: WritableColumnVector, idx: Int,
+      elem: ElemType, o: Int, sentinel: Long): Unit = elem match {
+    case ElemType.B =>
+      // unsigned FITS byte: sentinel is the stored 0-255 value
+      val x = buf(o)
+      if ((x & 0xff).toLong == sentinel) v.putNull(idx) else v.putByte(idx, x)
+    case ElemType.I =>
+      val x = ElemType.s16(buf, o)
+      if (x.toLong == sentinel) v.putNull(idx) else v.putShort(idx, x)
+    case ElemType.J =>
+      val x = i32(o)
+      if (x.toLong == sentinel) v.putNull(idx) else v.putInt(idx, x)
+    case ElemType.K =>
+      val x = i64(o)
+      if (x == sentinel) v.putNull(idx) else v.putLong(idx, x)
+    case other => throw new IllegalStateException(
+      s"TNULL on non-integer element $other")
   }
 
   @inline private def i32(o: Int): Int = ElemType.i32(buf, o)

@@ -1404,39 +1404,17 @@ final class FitsPartitionReaderFactory(confProps: Array[(String, String)])
     c
   }
 
-  override def createReader(p: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val fp = p.asInstanceOf[FitsInputPartition]
-    val inner = new FitsPartitionReader(fp, hadoopConf)
-    if (fp.metaKinds.isEmpty) inner
-    else new FitsMetadata.RowReader(inner, fp)
-  }
+  /** Every FITS partition reads columnar: [[FitsColumnarReader]] is
+    * the scan's one decode path, and ColumnarToRow is its one hand-off
+    * to row operators. */
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    p.isInstanceOf[FitsInputPartition]
 
-  /** Everything except TDIM (nested-array) columns reads vectorized
-    * (ColumnarBatch → the same ColumnarToRow path as Spark's parquet
-    * reader): fixed-width scalars, strings, fixed-repeat vectors, bit
-    * fields, TNULL scalars AND vectors, variable-length P/Q columns,
-    * TSCAL/TZERO/BSCALE-scaled data (unboxed via ScaledElem's
-    * primitive-typed decoders), image HDUs, and tile-compressed
-    * images. TDIM columns take the boxed row path — nested ArrayData
-    * assembly has no vectorized fill and multi-dim columns are rare
-    * enough that per-scan fallback is the right trade. The spec is
-    * identical across one scan's partitions, so the answer is
-    * scan-consistent. */
-  override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case f: FitsInputPartition => f.spec match {
-      // every bintable column form decodes vectorized: fixed-width,
-      // strings, fixed vectors, scaled, ASCII text, TNULL scalars AND
-      // vectors, bit fields, and var-length columns (through the
-      // coalesced heap window, strings byte-exact via putByteArray)
-      case DecodeSpec.Bintable(cols, _) =>
-        cols.nonEmpty && !cols.exists(_.tform.isInstanceOf[TForm.Md])
-      case _: DecodeSpec.Image => true
-      // tiles decompress per row, then fill vectors directly — the
-      // boxed Seq[Row] path cost ~3× on wide compressed images
-      case _: DecodeSpec.CompImage => true
-    }
-    case _ => false
-  }
+  /** Required by the interface; no FITS scan reaches it, because
+    * [[supportColumnarReads]] holds for every partition. */
+  override def createReader(p: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    throw new UnsupportedOperationException(
+      "FITS partitions are read columnar only")
 
   override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val fp = p.asInstanceOf[FitsInputPartition]

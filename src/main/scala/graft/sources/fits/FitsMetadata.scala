@@ -1,7 +1,5 @@
 package graft.sources.fits
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
@@ -25,9 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference has no provenance surface at all; at archive scale
   * (alert streams, reprocessing campaigns) joining results back to
   * their source exposure file is a first-class need. The columns ride
-  * the existing readers through thin wrappers — constants per
-  * partition plus one ascending counter — so the scan stays vectorized
-  * and the decode paths are untouched. */
+  * the scan's reader through a thin wrapper — constants per partition
+  * plus one ascending counter — so the scan stays vectorized and the
+  * decode path is untouched. */
 object FitsMetadata {
   val FilePath = "_file_path"
   val Hdu = "_hdu"
@@ -74,45 +72,7 @@ object FitsMetadata {
     }.toArray
   }
 
-  /** Row-path wrapper: appends the requested metadata values after the
-    * inner reader's data columns (same shape Spark's own FileScanRDD
-    * uses for partition values — a reused JoinedRow, no per-row
-    * allocation beyond the index bump). */
-  final class RowReader(inner: PartitionReader[InternalRow],
-      part: FitsInputPartition) extends PartitionReader[InternalRow] {
-    private val kinds = part.metaKinds
-    private val metaRow = new GenericInternalRow(kinds.length)
-    private val joined = new JoinedRow
-    private var rowIdx = part.firstRowIndex - 1
-    locally {
-      var i = 0
-      while (i < kinds.length) {
-        kinds(i) match {
-          case KindFilePath =>
-            metaRow.update(i, UTF8String.fromString(part.file))
-          case KindHdu => metaRow.update(i, part.hduIndex)
-          case _ => ()
-        }
-        i += 1
-      }
-    }
-    override def next(): Boolean = {
-      val has = inner.next()
-      if (has) rowIdx += 1
-      has
-    }
-    override def get(): InternalRow = {
-      var i = 0
-      while (i < kinds.length) {
-        if (kinds(i) == KindRowIndex) metaRow.update(i, rowIdx)
-        i += 1
-      }
-      joined(inner.get(), metaRow)
-    }
-    override def close(): Unit = inner.close()
-  }
-
-  /** Columnar-path wrapper: the data vectors pass through untouched;
+  /** Reader wrapper: the data vectors pass through untouched;
     * `_file_path`/`_hdu` are ConstantColumnVectors and `_row_index` an
     * OnHeapColumnVector refilled with an ascending run per batch. */
   final class BatchReader(inner: PartitionReader[ColumnarBatch],

@@ -102,7 +102,7 @@ final class FitsFile private (
             var c0 = 0
             while (tc < c.nTileCols) {
               val tw = math.min(c.tileWidth, width - c0)
-              out(tc) = graft.sources.fits.FitsPartitionReader.compTileBytes(
+              out(tc) = TileCodec.compTileBytes(
                 c, buf, tc * rowB, Array.emptyByteArray, 0L, 0L, in,
                 c.heapStart, tw * bandH)
               c.quant.foreach { q =>

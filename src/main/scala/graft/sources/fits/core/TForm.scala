@@ -325,7 +325,9 @@ object TForm {
       case Scalar(_, e) => (e, 1)
       case Vec(_, e, n) => (e, n)
     }
-    def isArray: Boolean = rep > 1
+    // a Vec inner is an array even at repeat 1 (TForm.asVec1 lifts a
+    // scalar that way so TDIM '(1,1)' can shape it)
+    def isArray: Boolean = inner.isInstanceOf[Vec]
     def repeat: Int = rep
 
     /** single scaling implementation, shared with the image path and

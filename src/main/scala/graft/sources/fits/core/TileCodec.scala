@@ -22,6 +22,62 @@ object TileCodec {
   val Supported: Set[String] =
     Set("RICE_1", "GZIP_1", "GZIP_2", "HCOMPRESS_1", "NOCOMPRESS")
 
+  /** Upper bound on one variable-length element's payload (256 MB):
+    * far above any legitimate array, document or tile, low enough that
+    * a corrupt descriptor cannot ask an executor for a multi-GB
+    * allocation. */
+  val MaxVarElement: Long = 256L << 20
+
+  /** Uncompressed big-endian tile payload for one descriptor row: the
+    * COMPRESSED_DATA descriptor, else the GZIP_COMPRESSED_DATA /
+    * UNCOMPRESSED_DATA per-tile fallbacks (a tile that didn't compress
+    * is stored there with a zero-length main descriptor); null when no
+    * column holds data. `nPix` is THIS tile's pixel count — edge tiles
+    * of a 2D tiling are narrower/shorter than the declared ZTILE size.
+    * Reads from the coalesced heap window when the payload falls inside
+    * it, else one positioned read. Shared by the connector's reader and
+    * the no-Spark facade. */
+  def compTileBytes(m: HduMeta.CompImage, rowBuf: Array[Byte],
+      base: Int, heapBuf: Array[Byte], heapBase: Long, heapLen: Long,
+      in: org.apache.hadoop.fs.FSDataInputStream,
+      heapStart: Long, nPix: Int): Array[Byte] = {
+    val expect = nPix * m.bytepix
+    def payloadOf(off: Int, v: TForm.VarArr): Array[Byte] = {
+      val (n0, hoff) = v.descriptor(rowBuf, base + off)
+      if (n0 <= 0) return null
+      val payload = n0 * v.elem.width
+      if (n0 > v.maxLen || payload > MaxVarElement)
+        throw new IllegalArgumentException(
+          s"corrupt tile descriptor: count $n0 outside [0, ${v.maxLen}] " +
+            s"or payload over $MaxVarElement bytes")
+      val p = payload.toInt
+      if (heapLen > 0 && hoff >= heapBase && hoff + p <= heapBase + heapLen)
+        java.util.Arrays.copyOfRange(heapBuf,
+          (hoff - heapBase).toInt, (hoff - heapBase).toInt + p)
+      else {
+        val b = new Array[Byte](p)
+        in.readFully(heapStart + hoff, b, 0, p)
+        b
+      }
+    }
+    val cdB = payloadOf(m.cd._1, m.cd._2)
+    if (cdB != null)
+      decompress(m.cmpType, cdB, nPix, m.bytepix,
+        m.blocksize, hsmooth = m.hsmooth)
+    else {
+      val gzB = m.gz.map(g => payloadOf(g._1, g._2)).orNull
+      if (gzB != null) gunzip(gzB, expect)
+      else {
+        val ucB = m.uc.map(u => payloadOf(u._1, u._2)).orNull
+        if (ucB == null) null
+        else if (ucB.length != expect)
+          throw new IllegalArgumentException(
+            s"UNCOMPRESSED_DATA tile: ${ucB.length} bytes, expected $expect")
+        else ucB
+      }
+    }
+  }
+
   /** `hsmooth` applies only to HCOMPRESS_1 (the convention's SMOOTH
     * parameter — lossy-mode smoothed reconstruction). */
   def decompress(cmpType: String, comp: Array[Byte], nPix: Int,

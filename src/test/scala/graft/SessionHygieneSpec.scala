@@ -26,6 +26,18 @@ class SessionHygieneSpec extends SparkTestBase {
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
+  test("Tables.evictMemo leaves no resolved frame of its session") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-memo").toString
+    spark.range(3).toDF("r_regionkey").write.parquet(s"$dir/region.parquet")
+    val s = spark.newSession()
+    import scala.jdk.CollectionConverters._
+    def keys = Tables.resolvedMemo.keySet.asScala.filter(_._1 eq s)
+    assert(Tables.load(s, dir, "region").count() == 3)
+    assert(keys.size == 1)
+    Tables.evictMemo(s)
+    assert(keys.isEmpty)
+  }
+
   test("survivors memo pins exactly its final labels; evictMemo releases them") {
     val sc = spark.sparkContext
     val base = sc.getPersistentRDDs.size

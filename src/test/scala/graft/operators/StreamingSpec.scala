@@ -6,6 +6,20 @@ import graft.{SparkTestBase, Tables}
 
 class StreamingSpec extends SparkTestBase {
 
+  test("statePartitions that is not a positive integer fails naming the " +
+      "key, before any streaming query starts") {
+    val key = "spark.graft.stream.statePartitions"
+    try Seq("0", "-1", "x").foreach { bad =>
+      spark.conf.set(key, bad)
+      val e = intercept[IllegalArgumentException] {
+        Streaming.stream_hour_counts(spark, sf0001)
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+      assert(spark.streams.active.isEmpty)
+    } finally spark.conf.unset(key)
+  }
+
   test("replay checkpoints are single-use: repeat runs re-ingest from " +
       "offset zero and leave no checkpoint dirs behind") {
     // r18 optimization round: runToTable places its per-run checkpoint

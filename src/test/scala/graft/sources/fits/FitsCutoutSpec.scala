@@ -328,7 +328,26 @@ class FitsCutoutSpec extends SparkTestBase {
     assert(e.getMessage.contains("colRange"), e.getMessage)
   }
 
-  test("row (boxed) reader honors the column window: plain + compressed") {
+  test("columnar reader honors the column window on hand-built " +
+      "partitions: plain + compressed") {
+    /** Drains `part`, checking each line's index and windowed pixels;
+      * returns the line after the last one read. */
+    def drain(part: FitsInputPartition, firstLine: Int, cols: Range): Int = {
+      val r = new FitsColumnarReader(part)
+      var line = firstLine
+      try while (r.next()) {
+        val b = r.get()
+        var i = 0
+        while (i < b.numRows()) {
+          assert(b.column(1).getLong(i) == line)
+          assert(b.column(0).getArray(i).toIntArray().toSeq ==
+            cols.map(c => line * 1000 + c))
+          line += 1
+          i += 1
+        }
+      } finally r.close()
+      line
+    }
     val dirP = Files.createTempDirectory("fits-cut").toString + "/boxp"
     writeImage(dirP, nLines = 12)
     val resP = FitsResolution(
@@ -339,18 +358,8 @@ class FitsCutoutSpec extends SparkTestBase {
     val partP = FitsInputPartition(resP.files.head.toString,
       hdusP(0).bounds.dataStart + 2 * metaP.rowBytes, 5, 2,
       metaP.rowBytes, 1 << 20, specP)
-    val rp = new FitsPartitionReader(partP)
-    try {
-      var line = 2
-      while (rp.next()) {
-        val row = rp.get()
-        assert(row.getLong(1) == line)
-        assert(row.getArray(0).toIntArray().toSeq ==
-          (3 to 7).map(c => line * 1000 + c))
-        line += 1
-      }
-      assert(line == 7)
-    } finally rp.close()
+    // the plain image partition starts at line 2
+    assert(drain(partP, 2, 3 to 7) == 7)
     val dirC = Files.createTempDirectory("fits-cut").toString + "/boxc"
     writeImage(dirC, nLines = 16,
       extra = Map("compress" -> "RICE_1", "compresstile" -> "8x8"))
@@ -361,18 +370,8 @@ class FitsCutoutSpec extends SparkTestBase {
     val specC = DecodeSpec.of(metaC, Array(0, 1), resC.colRange)
     val partC = FitsInputPartition(resC.files.head.toString,
       hdusC(1).bounds.dataStart, 16, 0, metaC.rowBytes, 1 << 20, specC)
-    val rc = new FitsPartitionReader(partC)
-    try {
-      var line = 0
-      while (rc.next()) {
-        val row = rc.get()
-        assert(row.getLong(1) == line)
-        assert(row.getArray(0).toIntArray().toSeq ==
-          (6 to 12).map(c => line * 1000 + c))
-        line += 1
-      }
-      assert(line == 16)
-    } finally rc.close()
+    // the compressed one at line 0
+    assert(drain(partC, 0, 6 to 12) == 16)
   }
 
   test("a data column named _row_index shadows the clamp (data semantics)") {

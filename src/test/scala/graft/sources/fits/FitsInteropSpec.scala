@@ -134,8 +134,9 @@ class FitsInteropSpec extends SparkTestBase {
     } finally Files.deleteIfExists(java.nio.file.Paths.get(p))
   }
 
-  /** TFORM1='B' + TNULL table; extra PA column forces the row path when
-    * `withDoc`, single B column exercises the columnar path. */
+  /** TFORM1='B' + TNULL table; `withDoc` adds a PA var-length column
+    * beside it (a heap-bearing projection), the single B column is the
+    * plain fixed-width shape. Both read through the columnar reader. */
   private def writeByteNullFile(path: String, tnull: String,
       data: Seq[Int], withDoc: Boolean): Unit = {
     val out = new DataOutputStream(new FileOutputStream(path))
@@ -168,10 +169,10 @@ class FitsInteropSpec extends SparkTestBase {
 
   test("standard unsigned TNULL on B columns matches the stored byte") {
     // TNULL=200 (unsigned convention): stored 0xC8 → NULL; stored 128
-    // surfaces as the signed wart value -128, NOT null. Row path.
+    // surfaces as the signed wart value -128, NOT null. With a PA column.
     val p1 = Files.createTempFile("graft-bnull1", ".fits").toString
     writeByteNullFile(p1, "200", Seq(200, 7, 128), withDoc = true)
-    // legacy signed card TNULL=-128 with stored 0x80 → NULL. Columnar.
+    // legacy signed card TNULL=-128 with stored 0x80 → NULL. B column only.
     val p2 = Files.createTempFile("graft-bnull2", ".fits").toString
     writeByteNullFile(p2, "-128", Seq(128, 5), withDoc = false)
     try {

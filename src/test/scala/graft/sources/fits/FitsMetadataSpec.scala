@@ -102,6 +102,9 @@ class FitsMetadataSpec extends SparkTestBase {
     val df = read(dir).select($"_file_path", $"_row_index")
     assert(df.count() == 1000)
     assert(df.distinct().count() == 1000) // (file, index) is a row id
+    // a constant select reads no data column either, yet keeps every row
+    val consts = read(dir).select(lit(7)).collect()
+    assert(consts.length == 1000 && consts.forall(_.getInt(0) == 7))
   }
 
   test("metadata survives filters and joins back to source rows") {

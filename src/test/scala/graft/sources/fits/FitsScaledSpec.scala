@@ -135,8 +135,8 @@ class FitsScaledSpec extends SparkTestBase {
     }
   }
 
-  // a bit-field (nX) column forces the boxed row path — the scaled
-  // decode must agree with the vectorized answer there too
+  // a scaled column beside a bit-field (nX) column: the scaled decode
+  // must stay exact with a bit field in the projection
   test("scaled columns decode identically on the boxed row path") {
     val f = Files.createTempDirectory("fits-scaled-row").resolve("row.fits")
     val rb = 2 + 1 // u16(I) + bits(8X)

@@ -15,24 +15,24 @@ import graft.SparkTestBase
 class FitsTdimSpec extends SparkTestBase {
   import FitsWriteSupport.{card, headerBlock, pad, quoted}
 
-  /** Hand-crafted single-HDU-pair FITS file: one `6J` column carrying
-    * row-scoped values 100·r + k for k = 0..5, with the given TDIM
-    * card (or none). */
+  /** Hand-crafted single-HDU-pair FITS file: one `<repeat>J` column
+    * carrying row-scoped values 100·r + k for k = 0 until repeat, with
+    * the given TDIM card (or none) and any `extra` column-1 cards. */
   private def handBuilt(dir: String, tdim: Option[String],
-      nRows: Int = 4): String = {
+      nRows: Int = 4, extra: Seq[String] = Nil, repeat: Int = 6): String = {
     val primary = headerBlock(Seq(card("SIMPLE", "T"),
       card("BITPIX", "8"), card("NAXIS", "0"), pad("END", 80)))
     val bt = headerBlock(Seq(
       card("XTENSION", quoted("BINTABLE")), card("BITPIX", "8"),
-      card("NAXIS", "2"), card("NAXIS1", "24"),
+      card("NAXIS", "2"), card("NAXIS1", (4 * repeat).toString),
       card("NAXIS2", nRows.toString), card("PCOUNT", "0"),
       card("GCOUNT", "1"), card("TFIELDS", "1"),
-      card("TTYPE1", quoted("mat")), card("TFORM1", quoted("6J"))) ++
-      tdim.map(d => card("TDIM1", quoted(d))).toSeq ++
+      card("TTYPE1", quoted("mat")), card("TFORM1", quoted(s"${repeat}J"))) ++
+      tdim.map(d => card("TDIM1", quoted(d))).toSeq ++ extra ++
       Seq(pad("END", 80)))
     val data = new java.io.ByteArrayOutputStream()
     val dd = new java.io.DataOutputStream(data)
-    (0 until nRows).foreach(r => (0 until 6).foreach(k =>
+    (0 until nRows).foreach(r => (0 until repeat).foreach(k =>
       dd.writeInt(100 * r + k)))
     val padded = data.toByteArray ++
       new Array[Byte]((2880 - data.size() % 2880) % 2880)
@@ -62,6 +62,46 @@ class FitsTdimSpec extends SparkTestBase {
     val picked = df.select(element_at(element_at(col("mat"), 2), 1))
       .collect().map(_.getInt(0)).sorted
     assert(picked.toSeq == Seq(3, 103, 203, 303))
+  }
+
+  test("hand-built TSCAL/TZERO-scaled TDIM column reads as nested doubles") {
+    val dir = Files.createTempDirectory("fits-tdim").toString
+    val scaling = Seq(card("TSCAL1", "0.5"), card("TZERO1", "10.0"))
+    val path = handBuilt(dir, Some("(2,3)"), extra = scaling)
+    val df = spark.read.format("fits").option("hdu", 1).load(path)
+    assert(df.schema("mat").dataType.simpleString == "array<array<double>>")
+    val rows = df.select(col("mat")).collect()
+    assert(rows.length == 4)
+    rows.zipWithIndex.foreach { case (r, i) =>
+      val mat = r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]](0)
+      // physical = 10 + 0.5 · stored; d1 = 2 fastest → 3 runs of 2
+      val want = (0 until 6).map(k => 10.0 + 0.5 * (100 * i + k))
+      assert(mat.map(_.toSeq) == want.grouped(2).toSeq, s"row $i: $mat")
+    }
+    // a scaled repeat-1 column with TDIM '(1,1)' nests its one element
+    val one = spark.read.format("fits").option("hdu", 1).load(
+      handBuilt(dir + "/one", Some("(1,1)"), extra = scaling, repeat = 1))
+    assert(one.schema("mat").dataType.simpleString == "array<array<double>>")
+    assert(one.select(col("mat")).collect().map(_.getAs[
+      scala.collection.Seq[scala.collection.Seq[Double]]](0).map(_.toSeq))
+      .toSeq == (0 until 4).map(i => Seq(Seq(10.0 + 50.0 * i))))
+  }
+
+  test("TDIM column selected with _row_index: ids and nested values align " +
+      "across batches") {
+    val dir = Files.createTempDirectory("fits-tdim").toString
+    val n = 5000 // more than one 4096-row batch
+    val path = handBuilt(dir, Some("(3,2)"), nRows = n)
+    val rows = spark.read.format("fits").option("hdu", 1).load(path)
+      .select(col("_row_index"), col("mat")).collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until n))
+    rows.foreach { r =>
+      val i = r.getLong(0).toInt
+      val mat = r.getAs[scala.collection.Seq[scala.collection.Seq[Int]]](1)
+      assert(mat.map(_.toSeq) == Seq(
+        Seq(100 * i, 100 * i + 1, 100 * i + 2),
+        Seq(100 * i + 3, 100 * i + 4, 100 * i + 5)), s"row $i: $mat")
+    }
   }
 
   test("TDIM whose product mismatches the repeat falls back to the flat vector") {

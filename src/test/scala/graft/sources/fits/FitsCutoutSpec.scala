@@ -328,8 +328,7 @@ class FitsCutoutSpec extends SparkTestBase {
     assert(e.getMessage.contains("colRange"), e.getMessage)
   }
 
-  test("columnar reader honors the column window on hand-built " +
-      "partitions: plain + compressed") {
+  test("columnar reader honors the column window: plain + compressed") {
     /** Drains `part`, checking each line's index and windowed pixels;
       * returns the line after the last one read. */
     def drain(part: FitsInputPartition, firstLine: Int, cols: Range): Int = {

@@ -69,22 +69,9 @@ object HCompress {
     htrans(wide, nx, ny)
     val s = math.max(scale, 0)
     if (s > 1) digitize(wide, s)
-    // One pass narrows each coefficient to |coefficient| in `a`, packs
-    // its sign (one bit per nonzero coefficient, MSB-first) and tracks
-    // the bitplane count per quadrant class: 0 = low-order (top-left),
-    // 1 = the two mixed quadrants, 2 = diagonal. The DC coefficient goes
-    // to the header and codes as 0.
-    val nel = nx * ny
-    val nx2 = (nx + 1) / 2
-    val ny2 = (ny + 1) / 2
-    val a = new Array[Int](nel)
-    val sign = new Array[Byte]((nel + 7) / 8)
-    val vmax = new Array[Int](3)
-    var nsBits = 0
-    var r = 0
-    var c = 0
+    val a = new Array[Int](pix.length)
     k = 0
-    while (k < nel) {
+    while (k < pix.length) {
       val v = wide(k)
       // The boundary is rejected too: the sign pass stores |coefficient|
       // and -Int.MinValue wraps, so a magnitude must fit a POSITIVE Int.
@@ -100,35 +87,56 @@ object HCompress {
         throw new IllegalArgumentException(
           s"HCOMPRESS coefficient overflow at $nx x $ny: $hint")
       }
-      if (k > 0 && v != 0) {
-        var m = v.toInt
-        if (m < 0) {
+      a(k) = v.toInt
+      k += 1
+    }
+    val nel = nx * ny
+    val out = new java.io.ByteArrayOutputStream(nel / 2 + 64)
+    out.write(0xDD); out.write(0x99)
+    writeInt(out, nx); writeInt(out, ny); writeInt(out, s)
+    writeLong(out, a(0).toLong)
+    a(0) = 0
+    // sign bits (one per nonzero coefficient, MSB-first), |coefficients|
+    val sign = new Array[Byte]((nel + 7) / 8)
+    var nsBits = 0
+    var i = 0
+    while (i < nel) {
+      val v = a(i)
+      if (v != 0) {
+        if (v < 0) {
           sign(nsBits >> 3) = (sign(nsBits >> 3) | (0x80 >>> (nsBits & 7))).toByte
-          m = -m
+          a(i) = -v
         }
         nsBits += 1
-        a(k) = m
-        val q = (if (c >= ny2) 1 else 0) + (if (r >= nx2) 1 else 0)
-        if (m > vmax(q)) vmax(q) = m
       }
-      k += 1
+      i += 1
+    }
+    // bitplane count per quadrant class: 0 = low-order (top-left),
+    // 1 = the two mixed quadrants, 2 = diagonal
+    val nx2 = (nx + 1) / 2
+    val ny2 = (ny + 1) / 2
+    val vmax = new Array[Int](3)
+    i = 0
+    var r = 0
+    var c = 0
+    while (i < nel) {
+      val q = (if (c >= ny2) 1 else 0) + (if (r >= nx2) 1 else 0)
+      if (a(i) > vmax(q)) vmax(q) = a(i)
+      i += 1
       c += 1
       if (c >= ny) { c = 0; r += 1 }
     }
-    val w = new BitWriter(nel / 2 + 64)
-    w.writeBits(0xDD, 8); w.writeBits(0x99, 8)
-    w.writeInt(nx); w.writeInt(ny); w.writeInt(s)
-    w.writeLong(wide(0))
-    w.writeBits(bitsOf(vmax(0)), 8); w.writeBits(bitsOf(vmax(1)), 8)
-    w.writeBits(bitsOf(vmax(2)), 8)
+    out.write(bitsOf(vmax(0))); out.write(bitsOf(vmax(1)))
+    out.write(bitsOf(vmax(2)))
+    val w = new BitWriter(out)
     qtreeEncode(w, a, 0, ny, nx2, ny2, bitsOf(vmax(0)))
     qtreeEncode(w, a, ny2, ny, nx2, ny / 2, bitsOf(vmax(1)))
     qtreeEncode(w, a, ny * nx2, ny, nx / 2, ny2, bitsOf(vmax(1)))
     qtreeEncode(w, a, ny * nx2 + ny2, ny, nx / 2, ny / 2, bitsOf(vmax(2)))
     w.writeNybble(0) // EOF sentinel
     w.flush()
-    w.writeByteRun(sign, (nsBits + 7) / 8, reversed = false)
-    w.toByteArray
+    out.write(sign, 0, (nsBits + 7) / 8)
+    out.toByteArray
   }
 
   // ---------------------------------------------------------------- decode
@@ -215,7 +223,6 @@ object HCompress {
   private def htrans(a: Array[Long], nx: Int, ny: Int): Unit = {
     val log2n = log2Ceil(math.max(nx, ny))
     val tmp = new Array[Long]((math.max(nx, ny) + 1) / 2)
-    val rowTmp = new Array[Long]((nx / 2) * ny)
     var shift = 0
     var mask = -2L
     var mask2 = -4L
@@ -271,8 +278,9 @@ object HCompress {
         }
       }
       var rr = 0
-      while (rr < nxtop) { shuffle(a, rr * ny, nytop, tmp); rr += 1 }
-      shuffleRows(a, nxtop, nytop, ny, rowTmp)
+      while (rr < nxtop) { shuffle(a, rr * ny, nytop, 1, tmp); rr += 1 }
+      var cc = 0
+      while (cc < nytop) { shuffle(a, cc, nxtop, ny, tmp); cc += 1 }
       nxtop = (nxtop + 1) >> 1
       nytop = (nytop + 1) >> 1
       shift = 1
@@ -297,7 +305,6 @@ object HCompress {
     val log2n = log2Ceil(math.max(nx, ny))
     if (log2n == 0) return
     val tmp = new Array[Long]((math.max(nx, ny) + 1) / 2)
-    val rowTmp = new Array[Long]((nx / 2) * ny)
     var shift = 1
     var bit0 = 1 << (log2n - 1)
     var bit1 = bit0 << 1
@@ -321,8 +328,9 @@ object HCompress {
       if (nyf <= c) nytop -= 1 else nyf -= c
       if (k == 0) { nrnd0 = 0; shift = 2 }
       var rr = 0
-      while (rr < nxtop) { unshuffle(a, rr * ny, nytop, tmp); rr += 1 }
-      unshuffleRows(a, nxtop, nytop, ny, rowTmp)
+      while (rr < nxtop) { unshuffle(a, rr * ny, nytop, 1, tmp); rr += 1 }
+      var cc = 0
+      while (cc < nytop) { unshuffle(a, cc, nxtop, ny, tmp); cc += 1 }
       if (smoothScale > 1) hsmooth(a, nxtop, nytop, ny, smoothScale)
       val oddx = nxtop & 1
       val oddy = nytop & 1
@@ -493,67 +501,28 @@ object HCompress {
 
   /** Group even-index elements (next level's sums) into the first half,
     * odd-index (this level's differences) into the second. */
-  private def shuffle(a: Array[Long], off: Int, n: Int,
+  private def shuffle(a: Array[Long], off: Int, n: Int, stride: Int,
       tmp: Array[Long]): Unit = {
     var nt = 0
     var i = 1
-    while (i < n) { tmp(nt) = a(off + i); nt += 1; i += 2 }
+    while (i < n) { tmp(nt) = a(off + i * stride); nt += 1; i += 2 }
     i = 2
     var p = 1
-    while (i < n) { a(off + p) = a(off + i); p += 1; i += 2 }
+    while (i < n) { a(off + p * stride) = a(off + i * stride); p += 1; i += 2 }
     var t = 0
-    while (t < nt) { a(off + p) = tmp(t); p += 1; t += 1 }
+    while (t < nt) { a(off + p * stride) = tmp(t); p += 1; t += 1 }
   }
 
-  private def unshuffle(a: Array[Long], off: Int, n: Int,
+  private def unshuffle(a: Array[Long], off: Int, n: Int, stride: Int,
       tmp: Array[Long]): Unit = {
     val nhalf = (n + 1) >> 1
     var nt = 0
     var i = nhalf
-    while (i < n) { tmp(nt) = a(off + i); nt += 1; i += 1 }
+    while (i < n) { tmp(nt) = a(off + i * stride); nt += 1; i += 1 }
     i = nhalf - 1
-    while (i >= 1) { a(off + 2 * i) = a(off + i); i -= 1 }
+    while (i >= 1) { a(off + 2 * i * stride) = a(off + i * stride); i -= 1 }
     var t = 0
-    while (t < nt) { a(off + 2 * t + 1) = tmp(t); t += 1 }
-  }
-
-  /** [[shuffle]] down every column of the top-left `nxtop` × `nytop`
-    * corner at once (row stride `ny`): the same permutation applied to
-    * whole row segments, which stays sequential in memory where a
-    * per-column pass strides a full row per element. */
-  private def shuffleRows(a: Array[Long], nxtop: Int, nytop: Int, ny: Int,
-      tmp: Array[Long]): Unit = {
-    var nt = 0
-    var r = 1
-    while (r < nxtop) {
-      System.arraycopy(a, r * ny, tmp, nt * nytop, nytop); nt += 1; r += 2
-    }
-    r = 2
-    var p = 1
-    while (r < nxtop) {
-      System.arraycopy(a, r * ny, a, p * ny, nytop); p += 1; r += 2
-    }
-    var t = 0
-    while (t < nt) {
-      System.arraycopy(tmp, t * nytop, a, p * ny, nytop); p += 1; t += 1
-    }
-  }
-
-  /** Inverse of [[shuffleRows]] ([[unshuffle]] of every column). */
-  private def unshuffleRows(a: Array[Long], nxtop: Int, nytop: Int, ny: Int,
-      tmp: Array[Long]): Unit = {
-    val nhalf = (nxtop + 1) >> 1
-    var nt = 0
-    var r = nhalf
-    while (r < nxtop) {
-      System.arraycopy(a, r * ny, tmp, nt * nytop, nytop); nt += 1; r += 1
-    }
-    r = nhalf - 1
-    while (r >= 1) { System.arraycopy(a, r * ny, a, 2 * r * ny, nytop); r -= 1 }
-    var t = 0
-    while (t < nt) {
-      System.arraycopy(tmp, t * nytop, a, (2 * t + 1) * ny, nytop); t += 1
-    }
+    while (t < nt) { a(off + (2 * t + 1) * stride) = tmp(t); t += 1 }
   }
 
   private def digitize(a: Array[Long], scale: Int): Unit = {
@@ -569,7 +538,12 @@ object HCompress {
   // -------------------------------------------------------- quadtree coding
 
   /** Encode the bitplanes of one coefficient quadrant, highest plane
-    * first — see [[QuadtreeEncoder]]. */
+    * first. Per plane: extract the bits into a compact nybble grid,
+    * Huffman-code the nonzero nybbles finest-level-first into a
+    * buffer while reducing (a reduction nybble marks which children
+    * are nonzero), then emit the buffer REVERSED — so the decoder sees
+    * coarsest-first, each code MSB-first. If the Huffman stream would
+    * outgrow the raw bitmap, escape to a direct nybble dump. */
   private def qtreeEncode(w: BitWriter, a: Array[Int], off: Int, stride: Int,
       nqx: Int, nqy: Int, nbitplanes: Int): Unit = {
     if (nqx <= 0 || nqy <= 0) {
@@ -585,210 +559,63 @@ object HCompress {
       }
       return
     }
-    val q = new QuadtreeEncoder(a, off, stride, nqx, nqy)
+    val log2n = log2Ceil(math.max(nqx, nqy))
+    val nx0 = (nqx + 1) >> 1
+    val ny0 = (nqy + 1) >> 1
+    val bmax = (nx0 * ny0 + 1) / 2
+    val scratch = new Array[Byte](nx0 * ny0)
+    val buffer = new Array[Byte](bmax)
     var bit = nbitplanes - 1
     while (bit >= 0) {
-      q.plane(w, bit)
-      bit -= 1
-    }
-  }
-
-  /** Quadtree coder of one nonempty `nqx` × `nqy` coefficient quadrant
-    * at `a(off…)` (row stride `stride`). Per plane: Huffman-code the
-    * nonzero nybbles of the quadtree finest-level-first into a buffer (a
-    * level-0 nybble holds one 2×2 coefficient block's bits, bit 3 =
-    * top-left … bit 0 = bottom-right, missing edge children 0; a higher
-    * nybble marks which of its four children are nonzero), then emit
-    * the buffer REVERSED — so the decoder sees coarsest-first, each code
-    * MSB-first. If the Huffman stream would outgrow the raw bitmap,
-    * escape to a direct nybble dump.
-    *
-    * Every level is read off one OR pyramid built per quadrant (each
-    * node's OR over the coefficients beneath it): a node is nonzero in
-    * plane `bit` exactly when its OR has that bit, so a plane costs one
-    * bit test per node plus work per nonzero node, instead of
-    * rebuilding and reducing the full grid. */
-  private final class QuadtreeEncoder(a: Array[Int], off: Int, stride: Int,
-      nqx: Int, nqy: Int) {
-    private val nx0 = (nqx + 1) >> 1
-    private val ny0 = (nqy + 1) >> 1
-    private val bmax = (nx0 * ny0 + 1) / 2
-    private val buffer = new Array[Byte](bmax)
-    private val grid = new Array[Byte](nx0 * ny0) // level 0, for an escape
-    // level k is lx(k) × ly(k) at pyr(lo(k)…); n(k+1) = (n(k)+1)/2
-    private val nLevels = math.max(log2Ceil(math.max(nqx, nqy)), 1)
-    private val lx = new Array[Int](nLevels)
-    private val ly = new Array[Int](nLevels)
-    private val lo = new Array[Int](nLevels + 1)
-    private val pyr = orPyramid()
-    // Huffman buffer state of the current plane, and how many level-0
-    // nybbles of it `grid` holds
-    private var b = 0
-    private var acc = 0
-    private var bits = 0
-    private var filled = 0
-
-    // A method, not an initializer block: the JIT cannot compile a loop
-    // entered with a constructor's operand stack in use (OSR), so these
-    // loops would run interpreted until <init> itself got hot.
-    private def orPyramid(): Array[Int] = {
-      var k = 0
-      while (k < nLevels) {
-        lx(k) = if (k == 0) nx0 else (lx(k - 1) + 1) >> 1
-        ly(k) = if (k == 0) ny0 else (ly(k - 1) + 1) >> 1
-        lo(k + 1) = lo(k) + lx(k) * ly(k)
-        k += 1
-      }
-      val p = new Array[Int](lo(nLevels))
-      var i = 0
-      while (i < nqx) {
-        val s0 = off + i * stride
-        val o0 = (i >> 1) * ny0
-        var j = 0
-        while (j + 1 < nqy) {
-          p(o0 + (j >> 1)) |= a(s0 + j) | a(s0 + j + 1)
-          j += 2
-        }
-        if (j < nqy) p(o0 + (j >> 1)) |= a(s0 + j)
-        i += 1
-      }
-      k = 1
-      while (k < nLevels) {
-        val cy = ly(k - 1)
-        val ny = ly(k)
-        var r = 0
-        while (r < lx(k - 1)) {
-          var c = 0
-          while (c < cy) {
-            p(lo(k) + (r >> 1) * ny + (c >> 1)) |= p(lo(k - 1) + r * cy + c)
-            c += 1
+      qtreeOnebit(a, off, stride, nqx, nqy, bit, scratch)
+      var nx = nx0
+      var ny = ny0
+      var b = 0
+      var acc = 0
+      var bits = 0
+      var expanded = false
+      // bufcopy: append Huffman codes for nonzero nybbles, LSB-first
+      def addLevel(n: Int): Unit = {
+        var i = 0
+        while (i < n && !expanded) {
+          val v = scratch(i) & 0xFF
+          if (v != 0) {
+            acc |= Code(v) << bits
+            bits += NCode(v)
+            if (bits >= 8) {
+              buffer(b) = (acc & 0xFF).toByte
+              b += 1
+              if (b >= bmax) expanded = true
+              acc >>>= 8
+              bits -= 8
+            }
           }
-          r += 1
+          i += 1
         }
-        k += 1
       }
-      p
-    }
-
-    def plane(w: BitWriter, bit: Int): Unit = {
-      b = 0
-      acc = 0
-      bits = 0
-      // bufcopy, level by level (finest first): append Huffman codes for
-      // nonzero nybbles, LSB-first
-      var expanded = !level0(bit)
+      addLevel(nx * ny)
       var k = 1
-      while (k < nLevels && !expanded) {
-        expanded = !upperLevel(k, bit)
+      while (!expanded && k < log2n) {
+        qtreeReduce(scratch, nx, ny)
+        nx = (nx + 1) >> 1
+        ny = (ny + 1) >> 1
+        addLevel(nx * ny)
         k += 1
       }
       if (expanded) {
-        // escape: direct bitmap (warning nybble 0, then the raw grid,
-        // nybble pairs packed into the spent buffer)
+        // escape: direct bitmap (warning nybble 0, then the raw grid)
         w.writeNybble(0)
-        val n = nx0 * ny0
-        var o = filled
-        var r = o / ny0
-        var c = o % ny0
-        while (o < n) {
-          grid(o) =
-            if (((pyr(o) >>> bit) & 1) == 0) 0
-            else blockNybble(r, c, bit).toByte
-          o += 1
-          c += 1
-          if (c == ny0) { c = 0; r += 1 }
-        }
-        o = 0
-        while (o + 1 < n) {
-          buffer(o >> 1) = ((grid(o) << 4) | grid(o + 1)).toByte
-          o += 2
-        }
-        w.writeByteRun(buffer, n >> 1, reversed = false)
-        if (o < n) w.writeNybble(grid(o))
+        qtreeOnebit(a, off, stride, nqx, nqy, bit, scratch)
+        var i = 0
+        while (i < nx0 * ny0) { w.writeNybble(scratch(i) & 0xFF); i += 1 }
       } else {
         w.writeNybble(0xF)
         if (bits > 0) w.writeBits(acc & ((1 << bits) - 1), bits)
         else if (b == 0) w.writeBits(Code(0), NCode(0))
-        w.writeByteRun(buffer, b, reversed = true)
+        var i = b - 1
+        while (i >= 0) { w.writeBits(buffer(i) & 0xFF, 8); i -= 1 }
       }
-    }
-
-    /** Appends nybble `v`'s code; false once the buffer is full. */
-    private def add(v: Int): Boolean = {
-      acc |= Code(v) << bits
-      bits += NCode(v)
-      if (bits >= 8) {
-        buffer(b) = (acc & 0xFF).toByte
-        b += 1
-        acc >>>= 8
-        bits -= 8
-        b < bmax
-      } else true
-    }
-
-    /** Codes level 0 of plane `bit`, storing each nybble in `grid`;
-      * false if the buffer filled. */
-    private def level0(bit: Int): Boolean = {
-      var o = 0
-      var r = 0
-      while (r < nx0) {
-        var c = 0
-        while (c < ny0) {
-          val v =
-            if (((pyr(o) >>> bit) & 1) == 0) 0
-            else blockNybble(r, c, bit)
-          grid(o) = v.toByte
-          o += 1
-          if (v != 0 && !add(v)) { filled = o; return false }
-          c += 1
-        }
-        r += 1
-      }
-      filled = o
-      true
-    }
-
-    /** Codes level `k` ≥ 1 of plane `bit`; false if the buffer filled. */
-    private def upperLevel(k: Int, bit: Int): Boolean = {
-      val ny = ly(k)
-      val cx = lx(k - 1)
-      val cy = ly(k - 1)
-      var o = lo(k)
-      var r = 0
-      while (r < lx(k)) {
-        var c = 0
-        while (c < ny) {
-          if (((pyr(o) >>> bit) & 1) != 0) {
-            // which children are nonzero, in level-0 bit order
-            val s0 = lo(k - 1) + 2 * r * cy + 2 * c
-            val right = 2 * c + 1 < cy
-            var v = ((pyr(s0) >>> bit) & 1) << 3
-            if (right) v |= ((pyr(s0 + 1) >>> bit) & 1) << 2
-            if (2 * r + 1 < cx) {
-              v |= ((pyr(s0 + cy) >>> bit) & 1) << 1
-              if (right) v |= (pyr(s0 + cy + 1) >>> bit) & 1
-            }
-            if (!add(v)) return false
-          }
-          o += 1
-          c += 1
-        }
-        r += 1
-      }
-      true
-    }
-
-    /** Plane `bit` of the 2×2 coefficient block (r, c) as a nybble. */
-    private def blockNybble(r: Int, c: Int, bit: Int): Int = {
-      val s0 = off + 2 * r * stride + 2 * c
-      val right = 2 * c + 1 < nqy
-      var v = ((a(s0) >>> bit) & 1) << 3
-      if (right) v |= ((a(s0 + 1) >>> bit) & 1) << 2
-      if (2 * r + 1 < nqx) {
-        v |= ((a(s0 + stride) >>> bit) & 1) << 1
-        if (right) v |= (a(s0 + stride + 1) >>> bit) & 1
-      }
-      v
+      bit -= 1
     }
   }
 
@@ -847,6 +674,54 @@ object HCompress {
     }
   }
 
+  /** Extract bit `bit` of each coefficient into a compact nybble grid:
+    * one nybble per 2×2 block, bit 3 = top-left … bit 0 = bottom-right
+    * (missing edge children stay 0). */
+  private def qtreeOnebit(a: Array[Int], off: Int, stride: Int, nqx: Int,
+      nqy: Int, bit: Int, out: Array[Byte]): Unit = {
+    val ny2 = (nqy + 1) >> 1
+    var i = 0
+    while (i < nqx) {
+      val s0 = off + i * stride
+      val s1 = if (i + 1 < nqx) s0 + stride else -1
+      var j = 0
+      while (j < nqy) {
+        var v = ((a(s0 + j) >>> bit) & 1) << 3
+        if (j + 1 < nqy) v |= ((a(s0 + j + 1) >>> bit) & 1) << 2
+        if (s1 >= 0) {
+          v |= ((a(s1 + j) >>> bit) & 1) << 1
+          if (j + 1 < nqy) v |= (a(s1 + j + 1) >>> bit) & 1
+        }
+        out((i >> 1) * ny2 + (j >> 1)) = v.toByte
+        j += 2
+      }
+      i += 2
+    }
+  }
+
+  /** One quadtree reduction, in place: parent nybble = which of its
+    * four children are nonzero. */
+  private def qtreeReduce(b: Array[Byte], nx: Int, ny: Int): Unit = {
+    val ny2 = (ny + 1) >> 1
+    var i = 0
+    while (i < nx) {
+      val s0 = i * ny
+      val s1 = if (i + 1 < nx) s0 + ny else -1
+      var j = 0
+      while (j < ny) {
+        var v = if (b(s0 + j) != 0) 8 else 0
+        if (j + 1 < ny && b(s0 + j + 1) != 0) v |= 4
+        if (s1 >= 0) {
+          if (b(s1 + j) != 0) v |= 2
+          if (j + 1 < ny && b(s1 + j + 1) != 0) v |= 1
+        }
+        b((i >> 1) * ny2 + (j >> 1)) = v.toByte
+        j += 2
+      }
+      i += 2
+    }
+  }
+
   /** One quadtree expansion, in place: spread each parent nybble to its
     * children as 0/1 marks, then replace every mark with its own nybble
     * read from the stream — in REVERSE scan order, mirroring the
@@ -886,41 +761,24 @@ object HCompress {
   }
 
   /** OR bit `bit` back into the coefficient quadrant from the compact
-    * nybble grid (nybbles as [[QuadtreeEncoder]] lays them out). */
+    * nybble grid (inverse of [[qtreeOnebit]]). */
   private def qtreeBitins(s: Array[Byte], nqx: Int, nqy: Int, a: Array[Int],
       off: Int, stride: Int, bit: Int): Unit = {
     val ny2 = (nqy + 1) >> 1
-    val jFull = nqy & ~1 // blocks left of this column have both columns
     var i = 0
     while (i < nqx) {
       val s0 = off + i * stride
-      val o0 = (i >> 1) * ny2
-      if (i + 1 < nqx) {
-        val s1 = s0 + stride
-        var j = 0
-        while (j < jFull) {
-          val v = s(o0 + (j >> 1))
-          if (v != 0) { // high planes are mostly zero nybbles
-            a(s0 + j) |= ((v >> 3) & 1) << bit
-            a(s0 + j + 1) |= ((v >> 2) & 1) << bit
-            a(s1 + j) |= ((v >> 1) & 1) << bit
-            a(s1 + j + 1) |= (v & 1) << bit
-          }
-          j += 2
+      val s1 = if (i + 1 < nqx) s0 + stride else -1
+      var j = 0
+      while (j < nqy) {
+        val v = s((i >> 1) * ny2 + (j >> 1)) & 0xFF
+        a(s0 + j) |= ((v >> 3) & 1) << bit
+        if (j + 1 < nqy) a(s0 + j + 1) |= ((v >> 2) & 1) << bit
+        if (s1 >= 0) {
+          a(s1 + j) |= ((v >> 1) & 1) << bit
+          if (j + 1 < nqy) a(s1 + j + 1) |= (v & 1) << bit
         }
-        if (jFull < nqy) {
-          val v = s(o0 + (jFull >> 1))
-          a(s0 + jFull) |= ((v >> 3) & 1) << bit
-          a(s1 + jFull) |= ((v >> 1) & 1) << bit
-        }
-      } else {
-        var j = 0
-        while (j < nqy) {
-          val v = s(o0 + (j >> 1))
-          a(s0 + j) |= ((v >> 3) & 1) << bit
-          if (j + 1 < nqy) a(s0 + j + 1) |= ((v >> 2) & 1) << bit
-          j += 2
-        }
+        j += 2
       }
       i += 2
     }
@@ -956,57 +814,23 @@ object HCompress {
 
   // --------------------------------------------------------------- bit I/O
 
-  /** MSB-first bit writer into its own growable byte array (the whole
-    * stream goes through it: `ByteArrayOutputStream` locks per byte). */
-  private final class BitWriter(initialBytes: Int) {
-    private var buf = new Array[Byte](math.max(initialBytes, 64))
-    private var len = 0
+  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
     private var acc = 0
     private var free = 8
-    private def put(v: Int): Unit = {
-      if (len == buf.length) buf = java.util.Arrays.copyOf(buf, len * 2)
-      buf(len) = v.toByte
-      len += 1
-    }
     def writeBits(v: Int, n: Int): Unit = {
       acc = (acc << n) | (v & ((1 << n) - 1))
       free -= n
       while (free <= 0) {
-        put(acc >>> -free)
+        out.write((acc >>> -free) & 0xFF)
         free += 8
       }
     }
     def writeNybble(v: Int): Unit = writeBits(v, 4)
-    def writeInt(v: Int): Unit = {
-      writeBits(v >>> 24, 8); writeBits(v >>> 16, 8)
-      writeBits(v >>> 8, 8); writeBits(v, 8)
-    }
-    def writeLong(v: Long): Unit = { writeInt((v >>> 32).toInt); writeInt(v.toInt) }
     def flush(): Unit = {
-      if (free < 8) put(acc << free)
+      if (free < 8) out.write((acc << free) & 0xFF)
       acc = 0
       free = 8
     }
-    /** `writeBits(b(i), 8)` for `b(0 until n)`, last first if
-      * `reversed`, with the stream state held in locals. An 8-bit write
-      * emits one byte and leaves `free` as it was. */
-    def writeByteRun(b: Array[Byte], n: Int, reversed: Boolean): Unit = {
-      if (len + n > buf.length)
-        buf = java.util.Arrays.copyOf(buf, math.max(len + n, len * 2))
-      val sh = 8 - free
-      var x = acc
-      var o = len
-      var i = 0
-      while (i < n) {
-        x = (x << 8) | (b(if (reversed) n - 1 - i else i) & 0xFF)
-        buf(o) = (x >>> sh).toByte
-        o += 1
-        i += 1
-      }
-      acc = x
-      len = o
-    }
-    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
 
   /** MSB-first bit reader over a 64-bit accumulator. Peeks may look up
@@ -1048,6 +872,15 @@ object HCompress {
       val slack = (consumed % 8).toInt
       if (slack != 0) { fill(8 - slack); consume(8 - slack) }
     }
+  }
+
+  private def writeInt(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
+    out.write((v >>> 24) & 0xFF); out.write((v >>> 16) & 0xFF)
+    out.write((v >>> 8) & 0xFF); out.write(v & 0xFF)
+  }
+
+  private def writeLong(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
+    writeInt(out, (v >>> 32).toInt); writeInt(out, v.toInt)
   }
 
   private def readInt(b: Array[Byte], off: Int): Int =

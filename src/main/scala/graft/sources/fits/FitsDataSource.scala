@@ -40,12 +40,27 @@ class FitsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "fits"
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FitsResolution(options.asCaseSensitiveMap().asScala.toMap).tableSchema
+  /** The resolution [[inferSchema]] built, for the [[getTable]] call that
+    * follows it on this instance within one `load()` (Spark's
+    * `FileDataSourceV2` keeps its file index the same way): without it
+    * the files are listed and the first file's headers walked twice. */
+  private var inferred: Option[FitsResolution] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val res = FitsResolution(options.asCaseSensitiveMap().asScala.toMap)
+    val schema = res.tableSchema
+    inferred = Some(res)
+    schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val res = FitsResolution(properties.asScala.toMap)
+    val props = properties.asScala.toMap
+    // taken and cleared: a reused provider never serves a stale listing
+    val cached = inferred
+    inferred = None
+    val res = cached.filter(_.options == props)
+      .getOrElse(FitsResolution(props))
     // the inferred-schema comparison must not force file resolution:
     // a write targets a directory that may not exist yet
     new FitsTable(res, Option(schema).filter(s =>
@@ -419,14 +434,26 @@ final class FitsScanBuilder(res: FitsResolution, tableSchema: StructType)
 
   /** Metadata-answerable aggregates push down (zero data bytes read at
     * any scale): `COUNT(*)`, and `MIN`/`MAX` of the line-index column
-    * of an image HDU or of `_row_index` on any HDU — per file those
-    * are just 0 and NAXIS2−1. Partial-pushdown protocol: the scan
-    * emits per-file partial rows, Spark combines them. Spark only
-    * offers the aggregation when every filter was fully pushed; this
-    * source keeps all filters residual, so any filtered query
-    * correctly falls back to the row scan. */
+    * of an image HDU or of `_row_index` on any HDU — per HDU those are
+    * just 0 and NAXIS2−1. Complete pushdown: the scan answers with the
+    * final row, so the plan needs no shuffle and no final aggregate.
+    * Spark only offers the aggregation when every filter was fully
+    * pushed; this source keeps all filters residual, so any filtered
+    * query correctly falls back to the row scan. */
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    aggKindsOf(aggregation).nonEmpty
+
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (aggregation.groupByExpressions().nonEmpty) return false
+    aggKinds = aggKindsOf(aggregation).getOrElse(Array.empty)
+    aggKinds.nonEmpty
+  }
+  private var aggKinds: Array[Int] = Array.empty
+
+  /** The [[FitsAggScan]] kind of each aggregate, or None when any of
+    * them needs data. Free of side effects: Spark asks
+    * [[supportCompletePushDown]] before [[pushAggregation]]. */
+  private def aggKindsOf(aggregation: Aggregation): Option[Array[Int]] = {
+    if (aggregation.groupByExpressions().nonEmpty) return None
     def idxKind(e: org.apache.spark.sql.connector.expressions.Expression,
         k: Int): Int = e match {
       case nr: org.apache.spark.sql.connector.expressions.NamedReference
@@ -445,11 +472,8 @@ final class FitsScanBuilder(res: FitsResolution, tableSchema: StructType)
       case m: Max => idxKind(m.column(), FitsAggScan.KindMaxIdx)
       case _ => -1
     }
-    val ok = kinds.nonEmpty && kinds.forall(_ >= 0)
-    if (ok) aggKinds = kinds
-    ok
+    Some(kinds).filter(ks => ks.nonEmpty && ks.forall(_ >= 0))
   }
-  private var aggKinds: Array[Int] = Array.empty
 
   override def build(): Scan =
     if (aggKinds.nonEmpty) new FitsAggScan(res, aggKinds)
@@ -692,14 +716,21 @@ object FitsAggScan {
   val KindMaxIdx = 2
 }
 
-/** Metadata-only aggregates: one partial row per file, derived from
-  * header metadata alone — COUNT(*) = NAXIS2, MIN(index) = 0,
-  * MAX(index) = NAXIS2−1. Zero-row files are skipped entirely, so an
-  * all-empty archive yields zero partitions and Spark's final
-  * aggregate correctly returns count 0 / null extrema. */
+/** Metadata-only aggregates, answered on the driver from header
+  * metadata alone and planned as ONE partition holding the final row:
+  * COUNT(*) = Σ NAXIS2 over the target HDUs, MIN(index) = 0 and
+  * MAX(index) = max(NAXIS2)−1 over the HDUs that have rows, NULL
+  * extrema when none has (an all-empty archive counts 0). */
 final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
-    extends Scan with Batch with Logging {
+    extends Scan with Batch with SupportsReportStatistics with Logging {
   import FitsAggScan._
+  /** Exactly one row of longs: joins against it plan as broadcasts. */
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(8L * kinds.length)
+    override def numRows(): java.util.OptionalLong =
+      java.util.OptionalLong.of(1L)
+  }
   override def readSchema(): StructType =
     StructType(kinds.zipWithIndex.map { case (k, i) =>
       org.apache.spark.sql.types.StructField(
@@ -708,7 +739,7 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
           case KindMinIdx => s"min_idx_$i"
           case _ => s"max_idx_$i"
         },
-        org.apache.spark.sql.types.LongType, nullable = false)
+        org.apache.spark.sql.types.LongType, nullable = k != KindCount)
     }.toSeq)
   override def toBatch: Batch = this
   override def description(): String =
@@ -716,15 +747,13 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
 
   override def planInputPartitions(): Array[InputPartition] = {
     val firstSchema = res.inferredSchema
-    FitsFiles.parMap(res.files, 16)(p => p -> res.scanFile(p))
-      .toArray.flatMap { case (path, hdus) =>
-      val idxs = res.hduIndicesFor(hdus)
+    val rowCounts = FitsFiles.parMap(res.files, 16)(p => p -> res.scanFile(p))
+      .flatMap { case (path, hdus) =>
       val missing = res.missingHduTokens(hdus)
       if (missing.nonEmpty && res.mode == "FAILFAST")
         throw new IllegalArgumentException(
           s"$path has no HDU ${missing.mkString(",")}")
-      if (idxs.isEmpty) Seq.empty
-      else idxs.flatMap { idx =>
+      res.hduIndicesFor(hdus).flatMap { idx =>
         val meta = res.targetMetaAt(hdus, idx)
         // multi-HDU: non-data HDUs contribute no rows (see planFor)
         if (res.isMultiHdu && !(meta.isReadable && meta.rowBytes > 0)) None
@@ -732,11 +761,11 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
           if (res.mode == "FAILFAST") throw new IllegalArgumentException(
             s"$path HDU $idx schema differs from first file's")
           None
-        } else if (meta.nRows == 0 && kinds.exists(_ != KindCount))
-          None // no rows: must not fabricate 0/−1 extrema
-        else Some(FitsAggPartition(meta.nRows, kinds): InputPartition)
+        } else Some(meta.nRows)
       }
     }
+    Array(FitsAggPartition(rowCounts.sum,
+      rowCounts.filter(_ > 0).maxOption.fold(-1L)(_ - 1), kinds))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -748,11 +777,12 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
           override def next(): Boolean = !done
           override def get(): org.apache.spark.sql.catalyst.InternalRow = {
             done = true
+            val hasRows = part.maxIdx >= 0
             new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
               part.kinds.map[Any] {
-                case KindCount => part.nRows
-                case KindMinIdx => 0L
-                case _ => part.nRows - 1
+                case KindCount => part.count
+                case KindMinIdx => if (hasRows) 0L else null
+                case _ => if (hasRows) part.maxIdx else null
               })
           }
           override def close(): Unit = ()
@@ -760,7 +790,9 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
     }
 }
 
-final case class FitsAggPartition(nRows: Long, kinds: Array[Int])
+/** The final metadata-aggregate row: total row count, and the largest
+  * row index of any target HDU (−1 when no HDU has rows). */
+final case class FitsAggPartition(count: Long, maxIdx: Long, kinds: Array[Int])
     extends InputPartition
 
 final class FitsScan(res: FitsResolution, tableSchema: StructType,
@@ -1398,8 +1430,12 @@ final case class FitsInputPartition(
 final class FitsPartitionReaderFactory(confProps: Array[(String, String)])
     extends PartitionReaderFactory {
 
+  /** Built once per task from the shipped entries alone: they are the
+    * driver's full conf, defaults included, so loading the default
+    * resources here would re-parse core-default/core-site XML per task
+    * only to overwrite every value. */
   @transient private lazy val hadoopConf: Configuration = {
-    val c = new Configuration()
+    val c = new Configuration(false)
     confProps.foreach { case (k, v) => c.set(k, v) }
     c
   }

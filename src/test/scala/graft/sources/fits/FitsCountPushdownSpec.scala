@@ -1,8 +1,16 @@
 package graft.sources.fits
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.SparkTestBase
 
-class FitsCountPushdownSpec extends SparkTestBase {
+class FitsCountPushdownSpec extends SparkTestBase
+    with AdaptiveSparkPlanHelper {
 
   private val res = RefFixtures.root
 
@@ -82,6 +90,48 @@ class FitsCountPushdownSpec extends SparkTestBase {
     val plan = agg.queryExecution.executedPlan.toString
     assert(!plan.contains("metadata-only aggregate"), plan)
     assert(agg.collect().head.getLong(0) == 10L)
+  }
+
+  /** The scan answers with the final row in one task: no shuffle and
+    * no aggregate above it. */
+  private def assertShuffleFree(q: DataFrame): Unit = {
+    val plan = q.queryExecution.executedPlan
+    assert(plan.toString.contains("metadata-only aggregate"), plan)
+    assert(collect(plan) { case s: ShuffleExchangeExec => s }.isEmpty, plan)
+    assert(collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan)
+    assert(plan.execute().getNumPartitions == 1, plan)
+  }
+
+  test("multi-file COUNT(*) and MIN/MAX(_row_index) plan no shuffle") {
+    import org.apache.spark.sql.functions._
+    val df = spark.read.format("fits").option("hdu", 1).load(s"$res/dir")
+    val counted = df.groupBy().count()
+    assert(counted.collect().head.getLong(0) == 27000L)
+    assertShuffleFree(counted)
+    val extent = df.agg(min(col("_row_index")), max(col("_row_index")),
+      count(lit(1)))
+    val row = extent.collect().head
+    assert((row.getLong(0), row.getLong(1), row.getLong(2)) ==
+      (0L, 19999L, 27000L))
+    assertShuffleFree(extent)
+  }
+
+  test("metadata aggregates over all-empty HDUs: count 0, NULL extrema") {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graft-empty-agg").toFile
+    (0 until 3).foreach(i =>
+      FitsManyFilesSpec.writeFile(s"$dir/empty$i.fits", 0L, 0))
+    try {
+      val df = spark.read.format("fits").option("hdu", 1).load(dir.getPath)
+      val agg = df.agg(count(lit(1)), min(col("_row_index")),
+        max(col("_row_index")))
+      val row = agg.collect().head
+      assert(row.getLong(0) == 0L && row.isNullAt(1) && row.isNullAt(2), row)
+      assertShuffleFree(agg)
+    } finally {
+      dir.listFiles().foreach(_.delete())
+      dir.delete()
+    }
   }
 
   test("LIMIT plans only the needed byte range") {

@@ -1,0 +1,100 @@
+package graft.sources.fits
+
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.duration._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.scalatest.funsuite.AnyFunSuite
+
+/** File discovery: every path spec resolves to the file list the
+  * `listFiles`-based listing gave, and `parMap` never waits unbounded. */
+class FitsFilesSpec extends AnyFunSuite {
+
+  private val conf = new Configuration()
+
+  /** The listing as `FitsFiles` did it with `exists` + `getFileStatus`
+    * and a recursive `fs.listFiles`: the semantics to keep. */
+  private def listFilesResolve(pathSpec: String): Seq[Path] =
+    pathSpec.split(',').toSeq.map(_.trim).filter(_.nonEmpty).flatMap { spec =>
+      val path = new Path(spec)
+      val fs = path.getFileSystem(conf)
+      def list(dir: Path): Seq[Path] = {
+        val it = fs.listFiles(dir, true)
+        val buf = Seq.newBuilder[Path]
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.isFile && st.getPath.getName.toLowerCase.endsWith(".fits"))
+            buf += st.getPath
+        }
+        buf.result().sortBy(_.toString)
+      }
+      if (fs.exists(path)) {
+        if (fs.getFileStatus(path).isDirectory) list(path) else Seq(path)
+      } else Option(fs.globStatus(path)).getOrElse(Array.empty).toSeq
+        .flatMap(st => if (st.isDirectory) list(st.getPath) else Seq(st.getPath))
+    }
+
+  private def withTree(body: String => Unit): Unit = {
+    val root = Files.createTempDirectory("graft-files").toFile
+    Seq("a.fits", "B.FITS", "c.txt", "g.fits.gz", "sub/d.fits",
+      "sub/deeper/e.Fits", "sub/f.dat", "sub2/h.fits").foreach { rel =>
+      val f = new File(root, rel)
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, Array[Byte](0))
+    }
+    def rm(f: File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    try body(root.getPath) finally rm(root)
+  }
+
+  private def names(root: String, ps: Seq[Path]): Seq[String] =
+    ps.map(_.toUri.getPath.stripPrefix(new File(root).toURI.getPath))
+
+  test("dir, nested dir, glob and comma-list specs list as listFiles did") {
+    withTree { root =>
+      val specs = Seq(root, s"$root/sub", s"$root/*.fits", s"$root/s*",
+        s"$root/sub/deeper/e.Fits", s"$root/sub2, $root/a.fits,$root/sub",
+        s"file://$root")
+      specs.foreach { spec =>
+        val got = FitsFiles.resolve(spec, conf)
+        assert(got.map(_.toString) == listFilesResolve(spec).map(_.toString),
+          spec)
+      }
+      // non-.fits files drop, the suffix matches case-insensitively, and
+      // a directory's files come sorted by path (upper case first)
+      assert(names(root, FitsFiles.resolve(root, conf)) ==
+        Seq("B.FITS", "a.fits", "sub/d.fits", "sub/deeper/e.Fits", "sub2/h.fits"))
+      assert(names(root, FitsFiles.resolve(s"$root/s*", conf)) ==
+        Seq("sub/d.fits", "sub/deeper/e.Fits", "sub2/h.fits"))
+      // comma lists keep their order; each part is sorted on its own
+      assert(names(root, FitsFiles.resolve(s"$root/sub2,$root/sub", conf)) ==
+        Seq("sub2/h.fits", "sub/d.fits", "sub/deeper/e.Fits"))
+      val e = intercept[IllegalArgumentException](
+        FitsFiles.resolve(s"$root/nothing*", conf))
+      assert(e.getMessage.contains("No FITS files found"))
+    }
+  }
+
+  test("parMap keeps order and fails naming an item that outlasts its wait") {
+    assert(FitsFiles.parMap(1 to 50, 4)(_ * 2) == (1 to 50).map(_ * 2))
+    val e = intercept[TimeoutException] {
+      FitsFiles.parMap(Seq("quick.fits", "stuck.fits", "after.fits"), 2,
+        200.millis) { name =>
+        if (name == "stuck.fits") Thread.sleep(60000)
+        name
+      }
+    }
+    assert(e.getMessage.contains("stuck.fits"), e.getMessage)
+    val boom = intercept[IllegalStateException] {
+      FitsFiles.parMap(Seq(1, 2, 3), 2)(i =>
+        if (i == 2) throw new IllegalStateException("bad header") else i)
+    }
+    assert(boom.getMessage == "bad header")
+  }
+}

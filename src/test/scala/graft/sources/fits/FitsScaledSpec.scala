@@ -137,7 +137,7 @@ class FitsScaledSpec extends SparkTestBase {
 
   // a scaled column beside a bit-field (nX) column: the scaled decode
   // must stay exact with a bit field in the projection
-  test("scaled columns decode identically on the boxed row path") {
+  test("scaled column decodes exactly beside a bit-field column") {
     val f = Files.createTempDirectory("fits-scaled-row").resolve("row.fits")
     val rb = 2 + 1 // u16(I) + bits(8X)
     val out = new DataOutputStream(new FileOutputStream(f.toString))

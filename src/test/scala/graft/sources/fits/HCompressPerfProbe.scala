@@ -26,6 +26,9 @@ class HCompressPerfProbe extends AnyFunSuite {
     val mbs = reps.toLong * h * w * 2.0 / (1 << 20) / sec
     info(f"decode: $mbs%.0f MB/s (int16 payload), ratio ${comp.length.toDouble / (h * w * 2)}%.3f, sink=$sink")
     assert(mbs > 20, f"decode collapsed to $mbs%.0f MB/s")
+    // warm the encoder like the decoder, so the figure is codec speed
+    // rather than JIT warm-up
+    (1 to 50).foreach(_ => HCompress.encode(pix, h, w, 0))
     val t1 = System.nanoTime()
     var esink = 0
     (1 to reps).foreach { _ => esink ^= HCompress.encode(pix, h, w, 0).length }

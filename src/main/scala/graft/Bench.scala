@@ -342,10 +342,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     // drop the memoized (checkpoint-backed) operator state before the
     // probe so it measures connector throughput, not session residue
-    operators.Dedup.evictMemo(spark)
-    operators.Similarity.evictMemo(spark)
-    operators.Relational.evictBucketMemo(spark)
-    Tables.evictMemo(spark)
+    graft.util.SessionMemo.clear(spark)
     // FITS scan throughput vs the reference's measured 16 MB/s/task
     // baseline (BASELINE.md row 1) — the connector is the engine's
     // core, so its number belongs in the bench artifact.

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.SessionMemo
+
 /** Loads the driver-generated TPC-H-ish TESTDATA tables (TESTDATA.md).
   *
   * Each table is one parquet file under the scale-factor dir. Reads go
@@ -30,35 +32,11 @@ object Tables {
     * mid-session at the same path must not go through this memo —
     * scratch round-trip dirs (fitsScratch) read via spark.read
     * directly, as before. */
-  private[graft] val resolvedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  // get-then-putIfAbsent, NOT computeIfAbsent: loading "events" nests a
-  // lookup of its raw frame in the same map, and a nested mutation
-  // inside computeIfAbsent's mapping function throws "Recursive update"
-  // when it lands on a resize. The benign race (two threads resolving
-  // the same table once each) is harmless — first put wins.
-  private def memoized(key: (SparkSession, String, String))
-      (resolve: => DataFrame): DataFrame = {
-    val cached = resolvedMemo.get(key)
-    if (cached != null) cached
-    else {
-      resolvedMemo.putIfAbsent(key, resolve)
-      resolvedMemo.get(key)
-    }
-  }
-
-  /** Drops this session's resolved frames (the memo holds strong
-    * session keys and never shrinks on its own — same hygiene as
-    * operators.Similarity.evictMemo). */
-  def evictMemo(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    resolvedMemo.keySet.asScala.filter(_._1 eq s).toList
-      .foreach(resolvedMemo.remove)
-  }
+  private val resolvedMemo =
+    new SessionMemo.Slot[(String, String), DataFrame](this)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    memoized((spark, dir, name)) {
+    SessionMemo(spark, resolvedMemo, (dir, name)) {
       if (name == "events") loadEvents(spark, dir)
       else spark.read.parquet(s"$dir/$name.parquet")
     }
@@ -67,7 +45,7 @@ object Tables {
     * probe its footer-declared `ts` type once per query start; memoized
     * so the probe stops paying a fresh footer read per key. */
   private[graft] def eventsRaw(spark: SparkSession, dir: String): DataFrame =
-    memoized((spark, dir, "events__raw")) {
+    SessionMemo(spark, resolvedMemo, (dir, "events__raw")) {
       spark.read.parquet(s"$dir/events.parquet")
     }
 

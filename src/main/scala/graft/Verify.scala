@@ -125,6 +125,8 @@ object Verify {
     val errJson = failed
       .map { case (k, msg) => s"${q(k)}: ${q(msg)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$dumpDir/errors.json"), errJson)
+    // frees the IVF index and bucketed-table copies under tmpdir
+    graft.util.SessionMemo.clear(spark)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(

@@ -63,8 +63,6 @@ object ProfileQuery {
     names.foreach { name =>
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      graft.operators.Dedup.evictMemo(spark)
-      graft.operators.Similarity.evictMemo(spark)
       stages.synchronized(stages.clear())
       val t0 = System.nanoTime()
       val rows = fn(spark, sfDir).count()
@@ -80,6 +78,7 @@ object ProfileQuery {
       }
       spark.catalog.clearCache()
       graft.operators.Streaming.dropSinkTables(spark)
+      graft.util.SessionMemo.clear(spark)
     }
     }
     spark.stop()

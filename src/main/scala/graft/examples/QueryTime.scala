@@ -27,19 +27,18 @@ object QueryTime {
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      // every rep measures the query COLD of cross-query memo state
-      // (survivor labels, IVF index): a memoized rep reads ~0.05s and
-      // profiles the cache, not the query. Unlike the bench, this tool
-      // has no warmup phase, so index builds land in the timing — it
-      // measures standalone cost by design.
-      graft.operators.Dedup.evictMemo(spark)
-      graft.operators.Similarity.evictMemo(spark)
       val t0 = System.nanoTime()
       val rows = fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[querytime] $name rep=$i sec=$dt%.2f rows=$rows")
       spark.catalog.clearCache()
       graft.operators.Streaming.dropSinkTables(spark)
+      // every rep measures the query COLD of cross-query memo state
+      // (resolved tables, survivor labels, IVF index, bucketed tables):
+      // a memoized rep reads ~0.05s and profiles the cache, not the
+      // query. Unlike the bench, this tool has no warmup phase, so index
+      // builds land in the timing — it measures standalone cost by design.
+      graft.util.SessionMemo.clear(spark)
     }
     spark.stop()
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{GraftFunctions, VectorFunctions}
+import graft.util.SessionMemo
 
 /** Deduplication suite over `documents` / `embeddings` (north-star
   * extension operators): exact, exact n-gram Jaccard, MinHash+LSH,
@@ -43,8 +44,11 @@ object Dedup {
 
   // ------------------------------------------------------- shingle layer
 
-  private val shingleMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // both memos hold localCheckpoint-backed frames: until released their
+  // blocks pin block-manager storage for the session's life
+  private def checkpointSlot = new SessionMemo.Slot[String, DataFrame](this,
+    (_, df) => org.apache.spark.sql.graftx.Bridge.unpersistCheckpoint(df))
+  private val shingleMemo = checkpointSlot
 
   /** Session-lifetime memoized shingle pass over the declared corpus at
     * `dir`: the (doc_id, h) frame, localCheckpoint-backed so EVERY
@@ -60,7 +64,7 @@ object Dedup {
     * probe fields, so every memo-backed key's per-key time reflects its
     * own aggregation work (r13 verdict ask #5). */
   private[operators] def shingleHashesFor(s: SparkSession, dir: String): DataFrame =
-    shingleMemo.computeIfAbsent((s, dir), _ =>
+    SessionMemo(s, shingleMemo, dir)(
       // measured-and-rejected (r18 opt round): Par.spread(docs) before
       // the explode — it fans the single-file scan out to 32 partitions,
       // but the five memo consumers then each pay 32-task scheduling on
@@ -455,8 +459,7 @@ object Dedup {
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
       .orderBy(col("cluster_size"))
 
-  private val survivorsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val survivorsMemo = checkpointSlot
 
   /** Builds this session's two shared memos up front and reports each
     * build's wall seconds `(shingle, survivorLabeling)`, so the bench
@@ -477,25 +480,13 @@ object Dedup {
   }
 
   /** Releases this session's memoized survivor labelings AND shingle
-    * passes — the frames are localCheckpoint-backed, so until evicted
-    * their blocks pin block-manager storage for the session's life
-    * (r2/r3 hygiene item: the memo maps hold strong keys and never
-    * shrink on their own). */
-  def evictMemo(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    Seq(survivorsMemo, shingleMemo).foreach { memo =>
-      memo.keySet.asScala.filter(_._1 eq s).toList.foreach { k =>
-        Option(memo.remove(k))
-          .foreach(org.apache.spark.sql.graftx.Bridge.unpersistCheckpoint)
-      }
-    }
-  }
+    * passes. */
+  def evictMemo(s: SparkSession): Unit = SessionMemo.clear(s, this)
 
   /** (doc_id, label) with label = min doc_id of the connected component
     * in the Jaccard ≥ 0.5 near-dup graph. */
   private[operators] def survivorLabels(s: SparkSession, dir: String): DataFrame =
-    survivorsMemo.computeIfAbsent((s, dir),
-      _ => computeSurvivorLabels(s, dir))
+    SessionMemo(s, survivorsMemo, dir)(computeSurvivorLabels(s, dir))
 
   /** Distributed min-label propagation with pointer jumping: each round
     * takes the min label over neighbors (one hop) and then follows the
@@ -595,22 +586,19 @@ object Dedup {
     * near-dup bucket and a no-op at test scale, so the oracled outputs
     * stay exact while a degenerate corpus cannot take the job down.
     *
-    * Two mechanisms, chosen by how the cap was set: the DEFAULT cap
-    * filters on the collected bucket's size() — zero extra actions, no
-    * extra exchange (the per-bucket aggregation is the pair pipeline's
-    * own). An EXPLICITLY configured cap takes the audited path instead:
-    * cache + hot-bucket count + logged drops (you set a knob, you get
-    * told what it did). `=0` disables.
+    * The guard filters on the collected bucket's size() — zero extra
+    * actions, no extra exchange (the per-bucket aggregation is the pair
+    * pipeline's own). `<=0` disables.
     */
-  /** Rows dropped by the DEFAULT hot-bucket guard: named accumulator
-    * (visible per-stage in the UI) + job-end log line when it grows,
-    * so zero-config drops at scale are never silent. */
+  /** Rows dropped by the hot-bucket guard: named accumulator (visible
+    * per-stage in the UI) + job-end log line when it grows, so drops at
+    * scale are never silent. */
   private[operators] def hotBucketDropAcc(spark: SparkSession) =
     graft.util.GuardMetrics.loggedAccumulator(spark.sparkContext,
-      "graft.lsh.defaultGuardDroppedRows") { v =>
-      "[graft] candidatesFromBands: default hot-bucket guard has " +
-        s"dropped $v band rows (buckets over $DefaultMaxBucket; set " +
-        "spark.graft.lsh.maxBucket for the audited path)"
+      "graft.lsh.guardDroppedRows") { v =>
+      "[graft] candidatesFromBands: hot-bucket guard has dropped " +
+        s"$v band rows (buckets over spark.graft.lsh.maxBucket, " +
+        s"default $DefaultMaxBucket)"
     }
 
   private[operators] val DefaultMaxBucket = 1000000L
@@ -656,33 +644,22 @@ object Dedup {
 
   /** Hot-bucket guard shared by the candidate generators, applied to
     * the per-bucket collected frame (bucket size = size(ds) — no extra
-    * window or aggregation; see the candidatesFromBands scaladoc for
-    * the default/explicit split). */
+    * window or aggregation; see the candidatesFromBands scaladoc).
+    * Dropped band ROWS (= the dropped buckets' summed sizes) are
+    * counted. */
   private def guardedBuckets(grouped: DataFrame): DataFrame = {
-    val explicit = grouped.sparkSession.conf
+    val maxBucket = grouped.sparkSession.conf
       .getOption("spark.graft.lsh.maxBucket").map(_.toLong)
-    explicit match {
-      case Some(n) if n <= 0 => grouped // cap disabled → no guard at all
-      case None =>
-        // default cap: size filter, no extra job; dropped band ROWS
-        // (= the dropped buckets' summed sizes) counted, as before
-        val acc = hotBucketDropAcc(grouped.sparkSession)
-        val keepBucket = udf { (n: Long) =>
-          val keep = n <= DefaultMaxBucket
-          if (!keep) acc.add(n)
-          keep
-        }
-        grouped.filter(keepBucket(size(col("ds")).cast("long")))
-      case Some(maxBucket) =>
-        // audited path: you set a knob, you get told what it did (one
-        // counting job over the cached aggregate, then the same filter)
-        val g = grouped.cache()
-        val nHot = g.filter(size(col("ds")) > maxBucket).count()
-        if (nHot > 0)
-          System.err.println(s"[graft] candidatesFromBands: maxBucket=" +
-            s"$maxBucket dropped $nHot hot buckets")
-        if (nHot == 0) g
-        else g.filter(size(col("ds")) <= maxBucket)
+      .getOrElse(DefaultMaxBucket)
+    if (maxBucket <= 0) grouped // cap disabled → no guard at all
+    else {
+      val acc = hotBucketDropAcc(grouped.sparkSession)
+      val keepBucket = udf { (n: Long) =>
+        val keep = n <= maxBucket
+        if (!keep) acc.add(n)
+        keep
+      }
+      grouped.filter(keepBucket(size(col("ds")).cast("long")))
     }
   }
 

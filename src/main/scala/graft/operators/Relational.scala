@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.Tables
+import graft.util.SessionMemo
 
 /** The declared relational surface (SURVEY.md §2.B, Q01–Q21).
   *
@@ -487,18 +488,21 @@ object Relational {
 
   // ------------------------------------------------- bucketed co-location
 
-  private val bucketMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
+  private val bucketMemo = new SessionMemo.Slot[String,
+    (String, String, String)](this, { case (s, (lt, ot, base)) =>
+      dropBucketed(s, lt, ot, base) })
   private val bucketSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toList
-        .reverseIterator.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close() // unclosed walk leaks a directory fd
-    }
+  /** Longest wait for one bucketed-table write: the build holds its
+    * registry entry, so every other caller for the corpus waits on it
+    * too. A write still running after this is stuck, not slow. */
+  private val BucketWriteTimeout = scala.concurrent.duration.Duration(30, "min")
+
+  private def dropBucketed(s: SparkSession, lt: String, ot: String,
+      base: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $lt")
+    s.sql(s"DROP TABLE IF EXISTS $ot")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
 
   /** lineitem + orders written ONCE bucketed (8 buckets, sorted) by
@@ -508,50 +512,51 @@ object Relational {
     * memoized per (session, corpus). Returns (lineitemTable, ordersTable). */
   private[operators] def bucketedTables(s: SparkSession,
       dir: String): (String, String) = {
-    val (lt, ot, _) = bucketMemo.computeIfAbsent((s, dir), { _ =>
+    val (lt, ot, _) = SessionMemo(s, bucketMemo, dir) {
       // Uniquifier = sanitized path + per-JVM counter: hashCode alone
       // can collide across corpus dirs (or sessions sharing a catalog),
       // silently serving one corpus's layout to another's query.
       val id = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40) +
         "_" + bucketSeq.getAndIncrement()
       val base = java.nio.file.Files.createTempDirectory("graft-bucketed")
+        .toString
       val lt = s"graft_lineitem_b_$id"
       val ot = s"graft_orders_b_$id"
-      try {
-        // the two layout writes are independent single-scan jobs —
-        // submit them from two driver threads so the second's tasks
-        // back-fill cores the first leaves idle (guide §2.6 "overlap
-        // independent jobs"); each write's plan is unchanged
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val writes = Seq(
-          Future {
-            t(s, dir, "lineitem").write.mode("overwrite")
-              .option("path", s"$base/$lt")
-              .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
-          },
-          Future {
-            t(s, dir, "orders").write.mode("overwrite")
-              .option("path", s"$base/$ot")
-              .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
-          })
-        // settle BOTH before rethrowing: the failure cleanup below must
-        // not drop tables while the sibling write is still in flight
-        val settled = writes.map(f =>
-          scala.util.Try(Await.result(f, Duration.Inf)))
-        settled.foreach(_.get)
-      } catch {
-        case e: Throwable =>
-          // failed build must not leak the temp dir or half-registered
-          // tables; the memo entry is only recorded on success
-          s.sql(s"DROP TABLE IF EXISTS $lt")
-          s.sql(s"DROP TABLE IF EXISTS $ot")
-          deleteRecursively(base)
-          throw e
+      // the two layout writes are independent single-scan jobs —
+      // submit them from two driver threads so the second's tasks
+      // back-fill cores the first leaves idle (guide §2.6 "overlap
+      // independent jobs"); each write's plan is unchanged
+      import scala.concurrent.{Await, Future, TimeoutException}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val writes = Seq(
+        lt -> Future {
+          t(s, dir, "lineitem").write.mode("overwrite")
+            .option("path", s"$base/$lt")
+            .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
+        },
+        ot -> Future {
+          t(s, dir, "orders").write.mode("overwrite")
+            .option("path", s"$base/$ot")
+            .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
+        })
+      // settle BOTH before rethrowing
+      val errors = writes.flatMap { case (tbl, f) =>
+        try { Await.ready(f, BucketWriteTimeout); f.value.get.failed.toOption }
+        catch { case _: TimeoutException => Some(new TimeoutException(
+          s"bucketed write of table $tbl not done after $BucketWriteTimeout"))
+        }
       }
-      (lt, ot, base.toString)
-    })
+      errors.headOption.foreach { e =>
+        // a failed build must not leak the temp dir or half-registered
+        // tables, but dropping them under a write that is still running
+        // would race it: then leave them and say where
+        if (writes.forall(_._2.isCompleted)) dropBucketed(s, lt, ot, base)
+        else System.err.println(
+          s"[graft] bucketedTables: a write is still running; left $base")
+        throw e
+      }
+      (lt, ot, base)
+    }
     (lt, ot)
   }
 
@@ -566,19 +571,9 @@ object Relational {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Drops this session's bucketed tables and deletes their directories
-    * (same hygiene as Similarity.evictMemo — without it every session
-    * leaks two table copies under tmpdir). */
-  def evictBucketMemo(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    bucketMemo.keySet.asScala.filter(_._1 eq s).toList.foreach { k =>
-      Option(bucketMemo.remove(k)).foreach { case (lt, ot, base) =>
-        s.sql(s"DROP TABLE IF EXISTS $lt")
-        s.sql(s"DROP TABLE IF EXISTS $ot")
-        deleteRecursively(java.nio.file.Paths.get(base))
-      }
-    }
-  }
+  /** Drops this session's bucketed tables and deletes their
+    * directories. */
+  def evictBucketMemo(s: SparkSession): Unit = SessionMemo.clear(s, this)
 
   /** B-extra: bucketed co-located join — the layout-driven scale
     * technique the flat-file joins can't use. Both sides read
@@ -1076,9 +1071,11 @@ object Relational {
     val meta = back.agg(
       count(lit(1)).as("n_rows"),
       (max(col("_row_index")) + lit(1L)).as("n_via_max"))
-    // full-scan cross-check ties headers to data
-    val scanned = back.select($"event_id")
-      .agg(count(lit(1)).cast(LongType).as("n_scanned"))
+    // full-scan cross-check ties headers to data: counting a column
+    // (event_id has no nulls) reads it, where count(lit(1)) would be
+    // answered from the headers like `meta`
+    val scanned = back
+      .agg(count($"event_id").cast(LongType).as("n_scanned"))
     meta.crossJoin(scanned)
       .select($"n_rows", $"n_via_max", $"n_scanned")
   }

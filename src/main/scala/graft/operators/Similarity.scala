@@ -1,10 +1,12 @@
 package graft.operators
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorFunctions
+import graft.util.SessionMemo
 
 /** Approximate-nearest-neighbor surface over `embeddings`.
   *
@@ -113,59 +115,33 @@ object Similarity {
     rankTopK(scored)
   }
 
-  // keys are (session, corpus, k): the quantizer, index layout, and
-  // bucket-occupancy map all depend on the cell count — a (session,
-  // corpus) key would silently serve one k's artifacts to another k's
+  // keys are (corpus, k): the quantizer, index layout, and
+  // bucket-occupancy map all depend on the cell count — a corpus-only
+  // key would silently serve one k's artifacts to another k's
   // probe planner and defeat the min-mass recall guard (r16 review)
-  private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), org.apache.spark.ml.clustering.KMeansModel]()
-  private val ivfIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), String]()
-  private val ivfMassMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Map[Int, Long]]()
+  private val ivfMemo = new SessionMemo.Slot[(String, Int),
+    org.apache.spark.ml.clustering.KMeansModel](this)
+  // evicted index directories are deleted from java.io.tmpdir —
+  // without that, every session leaks a whole bucketed corpus copy
+  private val ivfIndexMemo = new SessionMemo.Slot[(String, Int), String](
+    this, (_, path) => FileUtils.deleteDirectory(new java.io.File(path)))
+  private val ivfMassMemo =
+    new SessionMemo.Slot[(String, Int), Map[Int, Long]](this)
   // resolved read of the on-disk index, keyed by its (unique, per-build
   // temp) path — plan reuse only, like Tables.resolvedMemo: the three
   // ivf keys + the mass probe each paid a fresh dir listing + footer
   // read (~65 ms and up; the index is a 16-directory partitioned tree)
-  private val ivfDfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val ivfDfMemo = new SessionMemo.Slot[String, DataFrame](this)
 
-  private def ivfIndexDf(s: SparkSession, dir: String, k: Int): DataFrame =
-    ivfDfMemo.computeIfAbsent((s, ivfIndexPath(s, dir, k)),
-      key => s.read.parquet(key._2))
-
-  /** Drops this session's memoized IVF quantizers (driver-resident
-    * centroid tables; small, but the map holds strong session keys and
-    * never shrinks on its own — r2/r3 hygiene item) and index paths.
-    * Evicted index directories are deleted from java.io.tmpdir —
-    * without that, every session leaks a whole bucketed corpus copy. */
-  def evictMemo(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    ivfMemo.keySet.asScala.filter(_._1 eq s).toList
-      .foreach(ivfMemo.remove)
-    ivfMassMemo.keySet.asScala.filter(_._1 eq s).toList
-      .foreach(ivfMassMemo.remove)
-    ivfIndexMemo.keySet.asScala.filter(_._1 eq s).toList
-      .foreach { k =>
-        Option(ivfIndexMemo.remove(k)).foreach(deleteRecursively)
-      }
-    ivfDfMemo.keySet.asScala.filter(_._1 eq s).toList
-      .foreach(ivfDfMemo.remove)
-    overlapMemo.keySet.asScala.filter(_._1 eq s).toList
-      .foreach(overlapMemo.remove)
+  private def ivfIndexDf(s: SparkSession, dir: String, k: Int): DataFrame = {
+    val path = ivfIndexPath(s, dir, k)
+    SessionMemo(s, ivfDfMemo, path)(s.read.parquet(path))
   }
 
-  private def deleteRecursively(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toList
-        .reverseIterator  // children before parents
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close() // unclosed walk leaks a directory fd
-    }
-  }
+  /** Drops this session's memoized IVF quantizers, index paths (deleting
+    * the index directories), bucket masses, index reads and recall
+    * audits. */
+  def evictMemo(s: SparkSession): Unit = SessionMemo.clear(s, this)
 
   /** Coarse quantizer for the IVF index, fit ONCE per (session, corpus)
     * on a bounded sample — k-means needs representative geometry, not
@@ -174,7 +150,7 @@ object Similarity {
     * the driver inside the model, exactly like a persisted index. */
   private def ivfModel(s: SparkSession, dir: String,
       k: Int): org.apache.spark.ml.clustering.KMeansModel =
-    ivfMemo.computeIfAbsent((s, dir, k), { _ =>
+    SessionMemo(s, ivfMemo, (dir, k)) {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       // Deterministic fit input: lowest-100k vec_ids, one partition,
@@ -198,7 +174,7 @@ object Similarity {
       // k-means|| init alone costs ~2k Spark jobs' worth of passes
       new KMeans().setK(k).setSeed(42).setMaxIter(5).setInitMode("random")
         .setFeaturesCol("fv").setPredictionCol("bucket").fit(sample)
-    })
+    }
 
   /** The IVF index on disk: the corpus written ONCE partitioned by its
     * coarse-quantizer bucket (`partitionBy(bucket)` → one directory per
@@ -210,7 +186,7 @@ object Similarity {
     * job writing to the warehouse instead. */
   private[operators] def ivfIndexPath(s: SparkSession, dir: String,
       k: Int): String =
-    ivfIndexMemo.computeIfAbsent((s, dir, k), { _ =>
+    SessionMemo(s, ivfIndexMemo, (dir, k)) {
       import org.apache.spark.ml.functions.array_to_vector
       val out = java.nio.file.Files.createTempDirectory("graft-ivf-index")
         .toString
@@ -227,7 +203,7 @@ object Similarity {
         .repartition(k, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(out)
       out
-    })
+    }
 
   /** Bucket occupancy of the on-disk IVF index (bucket → row count),
     * memoized per (session, corpus, k). k rows total — computed with one
@@ -236,11 +212,11 @@ object Similarity {
     * needs it for the min-probe-mass guard below. */
   private[operators] def ivfBucketMass(s: SparkSession, dir: String,
       k: Int): Map[Int, Long] =
-    ivfMassMemo.computeIfAbsent((s, dir, k), { _ =>
+    SessionMemo(s, ivfMassMemo, (dir, k)) {
       ivfIndexDf(s, dir, k)
         .groupBy(col("bucket")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    })
+    }
 
   /** Fraction of total corpus mass a probe must cover (~5-6/16 cells
     * of a BALANCED index). The r15 10× canary showed why probe count
@@ -652,14 +628,14 @@ object Similarity {
     * from scratch (bench reps stay honest), ≤ NQueries rows live on
     * the driver, and evictMemo drops them with the other session
     * state. */
-  private val overlapMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Array[(Long, Long)]]()
+  private val overlapMemo =
+    new SessionMemo.Slot[(String, String), Array[(Long, Long)]](this)
 
   private def recallGate(s: SparkSession, dir: String, family: String,
       ann: DataFrame, floor: Int): DataFrame = {
     val rows = annOverlap(s, dir, ann)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    overlapMemo.put((s, dir, family), rows)
+    SessionMemo.put(s, overlapMemo, (dir, family), rows)
     import s.implicits._
     rows.toSeq.toDF("q_id", "hits")
       .filter(col("hits") >= floor)
@@ -671,7 +647,7 @@ object Similarity {
     * compute it fresh when the diag runs standalone. */
   private def overlapFor(s: SparkSession, dir: String, family: String,
       ann: => DataFrame): DataFrame =
-    Option(overlapMemo.get((s, dir, family))) match {
+    SessionMemo.get(s, overlapMemo, (dir, family)) match {
       case Some(rows) =>
         import s.implicits._
         rows.toSeq.toDF("q_id", "hits")

@@ -184,43 +184,24 @@ final case class ApproxCosineJoinExec(
         }
       }
 
-    var lk = keyed(left, lBound)
-    var rk = keyed(right, rBound)
+    val lk = keyed(left, lBound)
+    val rk = keyed(right, rBound)
     // Hot-bucket guard: a band bucket of f rows on both sides is an f²
     // all-pairs loop AND an f-row in-memory cogroup buffer — one
     // degenerate band value (all-identical boilerplate vectors) owns
     // the whole job at scale. DEFAULT-ON at 1M — far above any
     // legitimate near-dup bucket and a no-op at test scale, so oracled
     // outputs stay exact while a degenerate corpus cannot own the job.
-    // Two mechanisms by how the cap was set (mirroring the dedup
-    // layer's candidatesFromBands): the DEFAULT cap is enforced inside
-    // the cogroup with an O(1) size check per bucket — no extra job
-    // (cogroup's spillable buffers bound memory; the f² LOOP is what
-    // the check skips). An EXPLICITLY configured cap pre-filters hot
-    // buckets before the shuffle with a logged drop count — you set a
-    // knob, you get told what it did. `=0` disables both.
-    val explicitCap = Option(
-      conf.getConfString("spark.graft.lsh.maxBucket", null)).map(_.toLong)
-    val cap: Long = explicitCap.getOrElse(1000000L)
-    explicitCap.filter(_ > 0).foreach { c =>
-        def hotKeys(rdd: RDD[((Int, Long), (InternalRow, Array[Long], ArrayData))]) =
-          rdd.map(kv => (kv._1, 1L)).reduceByKey(_ + _)
-            .filter(_._2 > c).keys
-        val hot = (hotKeys(lk) ++ hotKeys(rk)).distinct().collect().toSet
-        if (hot.nonEmpty) {
-          System.err.println(s"[graft] ApproxCosineJoinExec: maxBucket=$c " +
-            s"dropped ${hot.size} hot band buckets")
-          val hotB = lk.sparkContext.broadcast(hot)
-          lk = lk.filter(kv => !hotB.value(kv._1))
-          rk = rk.filter(kv => !hotB.value(kv._1))
-        }
-      }
-    // default-path skips must be visible: named accumulator + job-end log
+    // The cap is enforced inside the cogroup with an O(1) size check
+    // per bucket — no extra job (cogroup's spillable buffers bound
+    // memory; the f² LOOP is what the check skips). `<=0` disables it.
+    val cap = conf.getConfString("spark.graft.lsh.maxBucket", "1000000").toLong
+    // skips must be visible: named accumulator + job-end log
     val skippedBuckets = graft.util.GuardMetrics.loggedAccumulator(
       sparkContext, "graft.approxCosineJoin.guardSkippedBuckets") { v =>
       s"[graft] ApproxCosineJoinExec: hot-bucket guard skipped $v " +
-        s"degenerate band buckets (over $cap rows on a side; set " +
-        "spark.graft.lsh.maxBucket to pre-filter with audited drops)"
+        "degenerate band buckets (over spark.graft.lsh.maxBucket rows " +
+        "on a side, default 1000000)"
     }
     lk.cogroup(rk).flatMap {
       case ((band, _), (ls, rs)) =>

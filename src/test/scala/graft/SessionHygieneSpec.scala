@@ -26,15 +26,14 @@ class SessionHygieneSpec extends SparkTestBase {
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
-  test("Tables.evictMemo leaves no resolved frame of its session") {
+  test("SessionMemo.clear leaves no resolved frame of its session") {
     val dir = java.nio.file.Files.createTempDirectory("tables-memo").toString
     spark.range(3).toDF("r_regionkey").write.parquet(s"$dir/region.parquet")
     val s = spark.newSession()
-    import scala.jdk.CollectionConverters._
-    def keys = Tables.resolvedMemo.keySet.asScala.filter(_._1 eq s)
+    def keys = util.SessionMemo.keys(s).filter(_._1 eq Tables)
     assert(Tables.load(s, dir, "region").count() == 3)
     assert(keys.size == 1)
-    Tables.evictMemo(s)
+    util.SessionMemo.clear(s)
     assert(keys.isEmpty)
   }
 

@@ -63,7 +63,7 @@ class ApproxCosineJoinSpec extends SparkTestBase {
     assert(df.columns.toSeq == Seq("l_id", "l_vec", "r_id", "r_vec", "sim"))
   }
 
-  test("maxBucket guard excludes degenerate all-identical buckets pre-shuffle") {
+  test("maxBucket guard excludes degenerate all-identical buckets") {
     import spark.implicits._
     // 50 identical vectors: every one of the 8 band buckets holds all
     // 50 rows on both sides — unguarded, that is 8 × 50² pair checks

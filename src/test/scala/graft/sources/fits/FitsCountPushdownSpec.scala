@@ -134,6 +134,18 @@ class FitsCountPushdownSpec extends SparkTestBase
     }
   }
 
+  test("q38 answers its extent from metadata and its cross-check from data") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val q = graft.operators.Relational.q38_fits_extent(spark, sf0001)
+    val row = q.collect().head
+    assert(row.getLong(0) == row.getLong(2), row)
+    val scans = collect(q.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.scan
+    }
+    assert(scans.count(_.isInstanceOf[FitsAggScan]) == 1, scans)
+    assert(scans.count(_.isInstanceOf[FitsScan]) == 1, scans)
+  }
+
   test("LIMIT plans only the needed byte range") {
     val df = spark.read.format("fits").option("hdu", 1)
       .load(s"$res/test_file.fits")

@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.sources.fits.core._
 
@@ -997,12 +998,44 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     planFor(res.files)
 
-  /** Plans row-aligned partitions for `files` — shared by the batch
-    * path (all resolved files) and the micro-batch stream (only the
-    * files new to the current batch). */
+  /** Plans input partitions for `files` — shared by the batch path
+    * (all resolved files) and the micro-batch stream (only the files
+    * new to the current batch): the row-aligned slices of
+    * [[slicesFor]], packed by [[FitsScan.pack]] so many small slices
+    * share a task. */
   private[fits] def planFor(files: Seq[Path]): Array[InputPartition] = {
+    val conf = SparkSession.active.sessionState.conf
+    val slices = slicesFor(files)
+    val out = FitsScan.pack(slices, conf.filesMaxPartitionBytes,
+      conf.filesOpenCostInBytes, minPartitions)
+    if (res.verbose) {
+      // reference parity (A18): file list + target-HDU header dump
+      logInfo(s"FITS files (${res.files.length}): " +
+        res.files.take(20).mkString(", ") +
+        (if (res.files.length > 20) ", ..." else ""))
+      res.firstFileHdus.lift(res.hduIndex).foreach { h =>
+        logInfo(s"HDU ${res.hduIndex} header:\n" + h.header.cards
+          .map(c => s"  ${c.keyword} = ${c.value.getOrElse("")}" +
+            c.comment.map(" / " + _).getOrElse("")).mkString("\n"))
+      }
+      logInfo(s"FITS scan: ${out.length} partitions packing " +
+        s"${slices.length} slices of ${files.length} files")
+    }
+    out
+  }
+
+  /** `spark.sql.files.minPartitionNum`, else the default parallelism. */
+  private def minPartitions: Int = {
     val session = SparkSession.active
-    val conf = session.sessionState.conf
+    math.max(1, session.sessionState.conf.filesMinPartitionNum
+      .getOrElse(session.sparkContext.defaultParallelism))
+  }
+
+  /** The row-aligned slices of `files` in plan order (file, then HDU,
+    * then row), each with the bytes it was sized by (see [[slice]]). */
+  private[fits] def slicesFor(
+      files: Seq[Path]): Seq[(FitsInputPartition, Long)] = {
+    val conf = SparkSession.active.sessionState.conf
     // Positional pruning: user-supplied schemas rename columns, so map
     // required fields to positions in the table schema, then to FITS
     // columns (the reference binds user schemas positionally too).
@@ -1019,9 +1052,6 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
       else FitsFiles.parMap(files, 16)(p => p -> res.scanFile(p))
 
     val firstSchema = res.inferredSchema
-    // Same split sizing as Spark's own file sources: honor
-    // maxPartitionBytes, but split smaller files further so the scan
-    // can still use the cluster's default parallelism.
     var statsSkipFiles = 0
     var statsSkipBytes = 0L
     val readable = fileMetas.flatMap { case (path, hdus) =>
@@ -1065,28 +1095,30 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     // accounting below reflects the value-domain pruning too
     val totalBytes = readable.map { case (_, b, _, _) => b.dataBytes }.sum +
       statsSkipBytes
-    val minParts = math.max(1,
-      conf.filesMinPartitionNum
-        .getOrElse(session.sparkContext.defaultParallelism))
+    // Slices are capped like Spark's own file splits: at most
+    // maxPartitionBytes, and smaller when the scan's bytes would
+    // otherwise give fewer slices than the minimum partition count.
     val targetBytes = math.min(conf.filesMaxPartitionBytes,
-      math.max(conf.filesOpenCostInBytes, totalBytes / minParts))
-    val parts = Array.newBuilder[InputPartition]
+      math.max(conf.filesOpenCostInBytes, totalBytes / minPartitions))
+    val slices = Vector.newBuilder[(FitsInputPartition, Long)]
     var remaining = limit.getOrElse(Long.MaxValue)
     readable.iterator.takeWhile(_ => remaining > 0)
       .foreach { case (path, bounds, meta, idx) =>
-        val sliced = slice(path, bounds, meta, positions, targetBytes, idx)
+        val (unitBytes, sliced) =
+          slice(path, bounds, meta, positions, targetBytes, idx)
         sliced.iterator.takeWhile(_ => remaining > 0).foreach { p =>
           val take = math.min(p.numRows, remaining)
-          parts += (if (take == p.numRows) p else p.copy(numRows = take))
+          slices += ((if (take == p.numRows) p else p.copy(numRows = take),
+            take * unitBytes))
           remaining -= take
         }
       }
-    val out = parts.result()
+    val out = slices.result()
     // skipped-bytes accounting for pruned plans: planned vs total data
     // bytes, recorded for tests/telemetry and logged whenever a
     // runtime run list actually clamped the scan
-    val plannedBytes = out.iterator.collect {
-      case p: FitsInputPartition => p.numRows * (p.spec match {
+    val plannedBytes = out.iterator.map { case (p, _) =>
+      p.numRows * (p.spec match {
         // strided-window image IO moves only the window's bytes
         case img: DecodeSpec.Image if img.ioWindow => img.windowBytes.toLong
         case _ => p.rowBytes.toLong
@@ -1095,21 +1127,8 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     lastPlanSummary = Some((plannedBytes, totalBytes))
     if (runtimeRuns.nonEmpty)
       logInfo(s"FITS runtime pruning: planned $plannedBytes of " +
-        s"$totalBytes data bytes (${out.length} partitions, " +
+        s"$totalBytes data bytes (${out.length} slices, " +
         s"${runtimeRuns.map(_.length).getOrElse(0)} runs)")
-    if (res.verbose) {
-      // reference parity (A18): file list + target-HDU header dump
-      logInfo(s"FITS files (${res.files.length}): " +
-        res.files.take(20).mkString(", ") +
-        (if (res.files.length > 20) ", ..." else ""))
-      res.firstFileHdus.lift(res.hduIndex).foreach { h =>
-        logInfo(s"HDU ${res.hduIndex} header:\n" + h.header.cards
-          .map(c => s"  ${c.keyword} = ${c.value.getOrElse("")}" +
-            c.comment.map(" / " + _).getOrElse("")).mkString("\n"))
-      }
-      logInfo(s"FITS scan: ${out.length} partitions over " +
-        s"${res.files.length} files")
-    }
     out
   }
 
@@ -1126,10 +1145,13 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     * sizing by the 8-16-byte descriptor rows would pack the payload of
     * a 100 GB compressed image into one task. `startByte` points at the
     * first band's descriptor row; `numRows`/`firstRowIndex` count
-    * lines. */
+    * lines.
+    *
+    * Returns the bytes one row (or line) is sized by, with the slices:
+    * a slice weighs its row count times that. */
   private def slice(path: Path, bounds: HduBounds, meta: HduMeta,
       positions: Array[Int], maxPartBytes: Long,
-      hduIdx: Int): Seq[FitsInputPartition] = {
+      hduIdx: Int): (Long, Seq[FitsInputPartition]) = {
     val rowBytes = meta.rowBytes
     val spec = DecodeSpec.of(meta, positions, res.colRange)
     val metaKinds = metaCols.map(FitsMetadata.kindOf)
@@ -1163,7 +1185,7 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
             }
           })
         }
-        runs.flatMap { case (rLo, rHiInc) =>
+        lineBytes -> runs.flatMap { case (rLo, rHiInc) =>
           val end = rHiInc + 1
           (rLo until end by linesPerPart).map { firstLine =>
             val n = math.min(linesPerPart, end - firstLine)
@@ -1207,7 +1229,7 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
             if (meta.nRows > 0) Vector((0L, meta.nRows - 1)) else Vector.empty
           case Some(rs) => rs
         }
-        runs.flatMap { case (lo, hi) =>
+        effRowBytes -> runs.flatMap { case (lo, hi) =>
           val start = math.min(meta.nRows, math.max(0L, lo))
           val end =
             if (hi < start) start
@@ -1250,6 +1272,38 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
       lineRange, FitsMetadata.columnsFor(tableSchema).map(_.name()),
       rowRange)
     new FitsMicroBatchStream(withMeta, res)
+  }
+}
+
+object FitsScan {
+  /** Packs weighted slices into input partitions by the rule Spark's
+    * file sources apply to files (`FilePartition.getFilePartitions`):
+    * each slice costs its weight plus `openCost`, and a partition
+    * closes before a slice whose weight would take it past
+    * `min(maxPartitionBytes, max(openCost, Σ cost / minParts))`. Slices
+    * keep plan order, so a packed scan returns rows in the order of an
+    * unpacked one. A partition of one slice stays that slice. */
+  private[fits] def pack(slices: Seq[(FitsInputPartition, Long)],
+      maxPartitionBytes: Long, openCost: Long,
+      minParts: Int): Array[InputPartition] = {
+    val total = slices.iterator.map(_._2 + openCost).sum
+    val maxSplit =
+      math.min(maxPartitionBytes, math.max(openCost, total / minParts))
+    val out = Array.newBuilder[InputPartition]
+    val bin = scala.collection.mutable.ArrayBuffer.empty[FitsInputPartition]
+    var size = 0L
+    def close(): Unit = if (bin.nonEmpty) {
+      out += (if (bin.length == 1) bin.head else FitsPackedPartition(bin.toArray))
+      bin.clear()
+      size = 0L
+    }
+    slices.foreach { case (p, weight) =>
+      if (size + weight > maxSplit) close()
+      bin += p
+      size += weight + openCost
+    }
+    close()
+    out.result()
   }
 }
 
@@ -1427,6 +1481,11 @@ final case class FitsInputPartition(
     hduIndex: Int = 0,
     metaKinds: Array[Int] = Array.empty) extends InputPartition
 
+/** Several slices that one task reads back to back, in plan order
+  * (see [[FitsScan.pack]]). */
+final case class FitsPackedPartition(slices: Array[FitsInputPartition])
+    extends InputPartition
+
 final class FitsPartitionReaderFactory(confProps: Array[(String, String)])
     extends PartitionReaderFactory {
 
@@ -1443,8 +1502,10 @@ final class FitsPartitionReaderFactory(confProps: Array[(String, String)])
   /** Every FITS partition reads columnar: [[FitsColumnarReader]] is
     * the scan's one decode path, and ColumnarToRow is its one hand-off
     * to row operators. */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    p.isInstanceOf[FitsInputPartition]
+  override def supportColumnarReads(p: InputPartition): Boolean = p match {
+    case _: FitsInputPartition | _: FitsPackedPartition => true
+    case _ => false
+  }
 
   /** Required by the interface; no FITS scan reaches it, because
     * [[supportColumnarReads]] holds for every partition. */
@@ -1452,10 +1513,47 @@ final class FitsPartitionReaderFactory(confProps: Array[(String, String)])
     throw new UnsupportedOperationException(
       "FITS partitions are read columnar only")
 
-  override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val fp = p.asInstanceOf[FitsInputPartition]
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
+    p match {
+      case fp: FitsInputPartition => sliceReader(fp)
+      case pp: FitsPackedPartition => new FitsChainedReader(pp.slices, sliceReader)
+    }
+
+  private def sliceReader(fp: FitsInputPartition)
+      : PartitionReader[ColumnarBatch] = {
     val inner = new FitsColumnarReader(fp, hadoopConf)
     if (fp.metaKinds.isEmpty) inner
     else new FitsMetadata.BatchReader(inner, fp)
+  }
+}
+
+/** Reads a packed partition's slices one after another. Each slice's
+  * reader opens when the one before it is exhausted and closed, so a
+  * task holds one file handle and one chunk buffer at a time. */
+private final class FitsChainedReader(slices: Array[FitsInputPartition],
+    open: FitsInputPartition => PartitionReader[ColumnarBatch])
+    extends PartitionReader[ColumnarBatch] {
+  private var opened = 0
+  private var current: PartitionReader[ColumnarBatch] = null
+
+  @scala.annotation.tailrec
+  override def next(): Boolean =
+    if (current != null && current.next()) true
+    else {
+      close()
+      if (opened == slices.length) false
+      else {
+        current = open(slices(opened))
+        opened += 1
+        next()
+      }
+    }
+
+  override def get(): ColumnarBatch = current.get()
+
+  override def close(): Unit = if (current != null) {
+    val r = current
+    current = null
+    r.close()
   }
 }

@@ -29,16 +29,6 @@ class FitsRuntimeFilterSpec extends SparkTestBase {
       .mode("overwrite").save(dir)
   }
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The scan's output-rows metric from the FINAL (adaptive) plan. */
   private def scanOutputRows(df: DataFrame): Long = {
     def find(p: SparkPlan): Seq[BatchScanExec] = p match {

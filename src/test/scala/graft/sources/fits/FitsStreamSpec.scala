@@ -113,6 +113,39 @@ class FitsStreamSpec extends SparkTestBase {
       s"expected 3 batches of one file each: $batchSizes")
   }
 
+  test("a micro-batch of many small files is packed; each file read once") {
+    val dir = Files.createTempDirectory("fits-stream-pack").toString
+    val ckpt = Files.createTempDirectory("fits-stream-pack-ck").toString
+    val nFiles = 24
+    val perBatch = 12
+    (0 until nFiles).foreach(f => FitsManyFilesSpec.writeFile(
+      f"$dir/f$f%02d.fits", f * rowsPerFile, rowsPerFile.toInt))
+
+    val partitions = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val values = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = spark.readStream.format("fits").option("hdu", 1)
+      .option("maxFilesPerTrigger", perBatch)
+      .load(dir)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        val vs = df.collect().map(_.getLong(0))
+        if (vs.nonEmpty) values.synchronized {
+          partitions += df.rdd.getNumPartitions
+          values ++= vs
+        }
+        ()
+      }
+      .start()
+    q.awaitTermination()
+
+    assert(partitions.length == nFiles / perBatch, partitions)
+    assert(partitions.forall(_ < perBatch),
+      s"batches of $perBatch files were not packed: $partitions")
+    assert(values.sorted.toSeq == (0L until nFiles * rowsPerFile))
+  }
+
   test("streaming image reads honor the colRange 2-D window") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

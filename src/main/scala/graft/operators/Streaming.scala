@@ -183,16 +183,28 @@ object Streaming {
       finally walk.close()
     }
 
-  /** Runs a streaming frame to completion into a memory sink. */
-  private def runToTable(s: SparkSession, out: DataFrame, name: String,
-      mode: String): DataFrame = {
+  /** Longest [[runToTable]] waits for a replay to drain its input. */
+  val ReplayTimeout: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(30, "minutes")
+
+  /** Runs a streaming frame to completion into a memory sink. A replay
+    * still running after `timeout` is stopped, and fails naming its
+    * query. */
+  private[operators] def runToTable(s: SparkSession, out: DataFrame,
+      name: String, mode: String,
+      timeout: scala.concurrent.duration.FiniteDuration = ReplayTimeout)
+      : DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory(
       checkpointBase(s), s"graft-ckpt-$name-")
     try {
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode(mode).option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      if (!q.awaitTermination(timeout.toMillis)) {
+        q.stop()
+        throw new java.util.concurrent.TimeoutException(
+          s"streaming replay '$name' did not finish within $timeout")
+      }
       if (sys.env.contains("GRAFT_STREAM_DEBUG"))
         q.recentProgress.foreach(p => System.err.println(
           s"[stream-debug] $name batch=${p.batchId} rows=${p.numInputRows} " +

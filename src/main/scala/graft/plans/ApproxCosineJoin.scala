@@ -263,12 +263,13 @@ object ApproxCosineJoin {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` registration:
-  * the planner strategy AND the full SQL function surface, so a
+  * the planner strategies AND the full SQL function surface, so a
   * SQL-only deployment (spark-sql, Thrift server, PySpark without
   * Scala access) sets one conf and gets everything. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => ApproxCosineJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.sources.fits.FitsHeaderAnswer)
     graft.functions.GraftFunctions.sqlBuilders.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

@@ -255,6 +255,46 @@ final case class FitsResolution(options: Map[String, String]) {
   def scanFile(p: Path): Vector[Hdu] =
     FitsStructure.scan(p.getFileSystem(hadoopConf), p)
 
+  /** Every resolved file with its HDUs: one header walk per file per
+    * load, shared by filter pushdown, the size estimate and partition
+    * planning of every scan over this resolution (headers are immutable
+    * once a load has listed the files, by the file-source contract). The
+    * workers walk through a captured conf, so none of them waits on
+    * this object's initialization lock, which the caller holds. */
+  @transient lazy val fileHdus: Seq[(Path, Vector[Hdu])] = {
+    val conf = hadoopConf
+    (files.head -> firstFileHdus) +: FitsFiles.parMap(files.tail, 16)(p =>
+      p -> FitsStructure.scan(p.getFileSystem(conf), p))
+  }
+
+  /** The target HDUs of one file that hold rows of the table, with
+    * their metadata (`columns` applied): readable, non-empty and of the
+    * first file's schema. `skip` hears every target left out for a
+    * reason the session mode rules on: an `hdu` token this file lacks
+    * (a list "1,9" with only HDU 1 present must FAILFAST like a bare
+    * "9" would), no readable HDU under `all`, or a differing schema.
+    * Under a multi-HDU `hdu`, non-data HDUs (the MEF primary under
+    * `all`) skip silently. */
+  def rowHdus(path: Path, hdus: Vector[Hdu])(
+      skip: String => Unit): Seq[(Int, HduMeta)] = {
+    val missing = missingHduTokens(hdus)
+    if (missing.nonEmpty)
+      skip(s"$path has no HDU ${missing.mkString(",")}; skipping")
+    val idxs = hduIndicesFor(hdus)
+    if (idxs.isEmpty && isAllHdu) skip(s"$path has no readable HDU; skipping")
+    idxs.flatMap { idx =>
+      val meta = targetMetaAt(hdus, idx)
+      val hasRows = meta.isReadable && meta.nRows > 0 && meta.rowBytes > 0
+      if (isMultiHdu && !hasRows) None
+      else if (meta.schema != inferredSchema) {
+        skip(s"$path HDU $idx schema ${meta.schema.simpleString} " +
+          s"differs from first file's ${inferredSchema.simpleString}; skipping")
+        None
+      } else if (hasRows) Some(idx -> meta)
+      else None
+    }
+  }
+
   /** The target HDU's metadata with the `columns` option applied. */
   def targetMeta(hdus: Vector[Hdu], file: Path): HduMeta = {
     val idx = hduIndexFor(hdus)
@@ -389,46 +429,68 @@ final class FitsScanBuilder(res: FitsResolution, tableSchema: StructType)
   private lazy val lineIndexCol: Option[String] =
     res.lineIndexColIn(tableSchema)
 
-  /** Image-cutout pushdown: conjuncts that bound the line-index column
-    * of an image HDU (`ImgIndex =, <, <=, >, >=, IN`) fold into one
-    * [lo, hi] line range that the partition planner clamps to — a
-    * cutout of a 100 GB image plans (and reads) only the byte bands the
-    * range intersects. This is an OPTIMIZATION, never a correctness
-    * dependency: every filter is also returned as residual, so Spark
-    * re-evaluates the full predicate on emitted rows (band-aligned
-    * clamps on compressed images legitimately emit a few extra edge
-    * lines). */
-  private def foldRange(col: String,
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : (Option[(Long, Long)], Array[org.apache.spark.sql.sources.Filter]) =
-    FitsScanBuilder.foldRange(col, filters)
-
+  /** Filter pushdown. Conjuncts that bound the line-index column of an
+    * image HDU (`ImgIndex =, <, <=, >, >=, IN`) fold into one [lo, hi]
+    * line range, and `_row_index` conjuncts into one row range, that
+    * the partition planner clamps to: a cutout of a 100 GB image plans
+    * (and reads) only the byte bands the range intersects. Value
+    * conjuncts on data columns drop files whose GMINn/GMAXn stats
+    * exclude them (see [[FitsStats]]).
+    *
+    * A conjunct the scan answers exactly leaves the plan: Spark then
+    * plans no `Filter` above the scan (so no generated code carries its
+    * literal), and offers aggregates and LIMIT to the scan. Index range
+    * conjuncts (not `IN`, which folds to an envelope) are exact when
+    * every HDU that plans rows slices them exactly: every HDU for
+    * `_row_index` but tile-compressed images, whose ranges widen to
+    * whole tile bands, and only plain images for the line index. A
+    * value conjunct is exact when, for every such HDU, the stats of some
+    * conjunct exclude it or its own stats prove every row matches. All
+    * other conjuncts stay residual. */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     val acc = Array.newBuilder[org.apache.spark.sql.sources.Filter]
+    val exact = Array.newBuilder[org.apache.spark.sql.sources.Filter]
+    def foldIndex(col: String, slicesExactly: HduMeta => Boolean)
+        : Option[(Long, Long)] = {
+      val (r, a) = FitsScanBuilder.foldRange(col, filters)
+      acc ++= a
+      if (a.nonEmpty && rowHdus.forall { case (_, m) => slicesExactly(m) })
+        exact ++= a.filter(FitsScanBuilder.foldsExactly)
+      r
+    }
     lineIndexCol.foreach { col =>
-      val (r, a) = foldRange(col, filters)
-      lineRange = r; acc ++= a
+      lineRange = foldIndex(col, _.isInstanceOf[HduMeta.Image])
     }
     // `_row_index` bounds prune EVERY HDU type — rows are fixed width,
-    // so "rows N..M of a 100 GB table" plans only those bytes (exact
-    // for tables and plain images, tile-band-widened for compressed).
+    // so "rows N..M of a 100 GB table" plans only those bytes.
     // A data column shadowing the name keeps data semantics: no clamp.
-    if (!tableSchema.fieldNames.contains(FitsMetadata.RowIndex)) {
-      val (r, a) = foldRange(FitsMetadata.RowIndex, filters)
-      rowRange = r; acc ++= a
-    }
-    // value predicates on data columns: evaluated per file against the
-    // writer's GMINn/GMAXn header stats at plan time (see [[FitsStats]])
+    if (!tableSchema.fieldNames.contains(FitsMetadata.RowIndex))
+      rowRange = foldIndex(FitsMetadata.RowIndex,
+        !_.isInstanceOf[HduMeta.CompImage])
     val dataCols = tableSchema.fieldNames.toSet
     valueFilters = filters.filter(f =>
       FitsStats.colOf(f).exists(dataCols.contains))
     acc ++= valueFilters
-    accepted = acc.result().distinct
-    filters
+    exact ++= filters.filter(f => FitsStats.provable(f, dataCols) &&
+      rowHdus.forall { case (hdu, _) =>
+        FitsStats.skips(res, tableSchema, valueFilters, hdu) ||
+          FitsStats.covers(res, tableSchema, f, hdu)
+      })
+    exactFilters = exact.result().distinct
+    accepted = (acc.result() ++ exactFilters).distinct
+    filters.filterNot(exactFilters.contains)
   }
   private var valueFilters
       : Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  private var exactFilters
+      : Array[org.apache.spark.sql.sources.Filter] = Array.empty
+
+  /** Every HDU that can plan rows, with its table-bound metadata. */
+  private lazy val rowHdus: Seq[(Hdu, HduMeta)] =
+    res.fileHdus.flatMap { case (path, hdus) =>
+      res.rowHdus(path, hdus)(_ => ()).map { case (i, m) => hdus(i) -> m }
+    }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
     accepted
@@ -438,9 +500,9 @@ final class FitsScanBuilder(res: FitsResolution, tableSchema: StructType)
     * of an image HDU or of `_row_index` on any HDU — per HDU those are
     * just 0 and NAXIS2−1. Complete pushdown: the scan answers with the
     * final row, so the plan needs no shuffle and no final aggregate.
-    * Spark only offers the aggregation when every filter was fully
-    * pushed; this source keeps all filters residual, so any filtered
-    * query correctly falls back to the row scan. */
+    * Spark only offers the aggregation when every filter left the plan
+    * (see [[pushFilters]]); the answer then counts the slices planned
+    * under those filters, so it is exact by construction. */
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     aggKindsOf(aggregation).nonEmpty
 
@@ -477,17 +539,23 @@ final class FitsScanBuilder(res: FitsResolution, tableSchema: StructType)
   }
 
   override def build(): Scan =
-    if (aggKinds.nonEmpty) new FitsAggScan(res, aggKinds)
-    else new FitsScan(res, tableSchema, required, limit, lineRange,
-      metaCols, rowRange, valueFilters)
+    if (aggKinds.isEmpty)
+      new FitsScan(res, tableSchema, required, limit, lineRange,
+        metaCols, rowRange, valueFilters, exactFilters)
+    else {
+      FitsHeaderAnswer.ensureStrategy(SparkSession.active)
+      // the rows the aggregate counts: no column is decoded
+      new FitsAggScan(res, new FitsScan(res, tableSchema, StructType(Nil),
+        limit, lineRange, Array.empty, rowRange, valueFilters, exactFilters),
+        aggKinds)
+    }
 }
 
 object FitsScanBuilder {
   /** Folds index-bounding conjuncts on `col` into one [lo, hi] range;
     * returns the range (if any bound tightened) and the filters it
-    * understood (reported as accepted — they STILL stay residual).
-    * Shared by the static pushdown (builder) and runtime filtering
-    * (scan), so both prune with identical semantics. */
+    * understood (reported as accepted; [[foldsExactly]] says which of
+    * them the range answers exactly). */
   private[fits] def foldRange(col: String,
       filters: Array[org.apache.spark.sql.sources.Filter])
       : (Option[(Long, Long)], Array[org.apache.spark.sql.sources.Filter]) = {
@@ -503,7 +571,8 @@ object FitsScanBuilder {
       case f @ EqualTo(`col`, v) => asLong(v).foreach { x =>
         lo = math.max(lo, x); hi = math.min(hi, x); acc += f }
       case f @ GreaterThan(`col`, v) => asLong(v).foreach { x =>
-        if (x < Long.MaxValue) lo = math.max(lo, x + 1); acc += f }
+        if (x < Long.MaxValue) lo = math.max(lo, x + 1) else hi = -1
+        acc += f }
       case f @ GreaterThanOrEqual(`col`, v) => asLong(v).foreach { x =>
         lo = math.max(lo, x); acc += f }
       case f @ LessThan(`col`, v) => asLong(v).foreach { x =>
@@ -521,6 +590,29 @@ object FitsScanBuilder {
     }
     (if (lo > 0L || hi < Long.MaxValue) Some((lo, hi)) else None,
       acc.result())
+  }
+
+  /** True iff [[foldRange]]'s range holds exactly the indices `f`
+    * admits: a comparison with an integral literal (a fractional one
+    * truncates), or IsNotNull (indices are never null). `In` folds to
+    * its envelope, a superset. */
+  private[fits] def foldsExactly(f: org.apache.spark.sql.sources.Filter)
+      : Boolean = {
+    import org.apache.spark.sql.sources._
+    def integral(v: Any): Boolean = v match {
+      case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+          _: java.lang.Byte => true
+      case _ => false
+    }
+    f match {
+      case EqualTo(_, v) => integral(v)
+      case GreaterThan(_, v) => integral(v)
+      case GreaterThanOrEqual(_, v) => integral(v)
+      case LessThan(_, v) => integral(v)
+      case LessThanOrEqual(_, v) => integral(v)
+      case IsNotNull(_) => true
+      case _ => false
+    }
   }
 
   /** Folds index conjuncts on `col` into a SORTED, DISJOINT run list —
@@ -568,9 +660,10 @@ object FitsScanBuilder {
   * A pushed comparison whose value range the stats PROVABLY exclude
   * drops the whole file from the plan — zero extra IO, the stats ride
   * the one header walk the planner already does. Conservative by
-  * construction: absent, unparsable, or NaN-poisoned stats never skip,
-  * and every filter stays residual, so this is an optimization with a
-  * superset contract, never a correctness dependency.
+  * construction: absent, unparsable, or NaN-poisoned stats never skip.
+  * The same stats, trusted exactly as far, also prove that EVERY row of
+  * a file matches a comparison ([[covers]]), which lets an exact
+  * conjunct leave the plan (see [[FitsScanBuilder.pushFilters]]).
   *
   * The reference has no predicate pushdown at all (SURVEY §4:
   * fixed-width rows ⇒ no row-group stats) — this is the writer-owned
@@ -591,14 +684,108 @@ private[fits] object FitsStats {
   }
   private def isNum(v: Any): Boolean = v.isInstanceOf[java.lang.Number]
 
+  /** Shapes [[covers]] can prove on data column `dataCols`: the
+    * comparisons of [[colOf]] but `In`, and IsNotNull. */
+  def provable(f: Filter, dataCols: Set[String]): Boolean = f match {
+    case _: In => false
+    case IsNotNull(c) => dataCols(c)
+    case _ => colOf(f).exists(dataCols)
+  }
+
+  private def bd(s: String): Option[BigDecimal] =
+    scala.util.Try(BigDecimal(s.trim)).toOption
+
+  /** The header's (GMIN, GMAX) for 0-based physical column `physIdx`. */
+  private def stats(h: core.FitsHeader, physIdx: Int)
+      : Option[(BigDecimal, BigDecimal)] = for {
+    mn <- h.values.get(s"GMIN${physIdx + 1}").flatMap(bd)
+    mx <- h.values.get(s"GMAX${physIdx + 1}").flatMap(bd)
+  } yield (mn, mx)
+
+  /** The 0-based physical column of `full` that table column `name`
+    * binds to, or −1. Binding is positional, like planning: the name
+    * maps to a table-schema position, then through the `columns`
+    * selection (TTYPE-name keyed, per file) to the FITS column the
+    * GMINn/GMAXn cards describe. */
+  private def physIndex(res: FitsResolution, tableSchema: StructType,
+      full: HduMeta.Bintable, name: String): Int = {
+    val p = tableSchema.fieldIndex(name)
+    val phys = res.columnsOption match {
+      case Some(names) if p < names.length =>
+        full.columns.indexWhere(_.name == names(p))
+      case Some(_) => -1
+      case None => p
+    }
+    if (phys < full.columns.length) phys else -1
+  }
+
+  /** True iff the stats of `hdu` prove that some of `filters` matches
+    * no row: the HDU drops from the plan. */
+  def skips(res: FitsResolution, tableSchema: StructType,
+      filters: Array[Filter], hdu: Hdu): Boolean =
+    filters.nonEmpty && (hdu.meta match {
+      case full: HduMeta.Bintable => filters.exists { f =>
+        colOf(f).exists { name =>
+          val phys = physIndex(res, tableSchema, full, name)
+          phys >= 0 && excludes(f, hdu.header, phys)
+        }
+      }
+      case _ => false
+    })
+
+  /** True iff `hdu` proves that every row matches the [[provable]]
+    * conjunct `f`. The column must never read as NULL (a numeric scalar
+    * with no TNULLn card), since stats leave nulls out. The literal must
+    * have the column's own type, not Float (see [[excludes]]): Spark
+    * then compares in a type whose order the BigDecimal domain keeps
+    * exactly. A float column holding NaN has no stats (the writer's
+    * poisoning), so it is never proven. */
+  def covers(res: FitsResolution, tableSchema: StructType, f: Filter,
+      hdu: Hdu): Boolean = (hdu.meta, f.references) match {
+    case (full: HduMeta.Bintable, Array(name)) =>
+      val phys = physIndex(res, tableSchema, full, name)
+      phys >= 0 && {
+        val col = full.columns(phys)
+        val neverNull = !hdu.header.values.contains(s"TNULL${phys + 1}") &&
+          (col.tform match {
+            case TForm.Scalar(_, e) => e != ElemType.L
+            case sc: TForm.Scaled => !sc.isArray
+            case _ => false
+          })
+        def literal(x: Any): Option[BigDecimal] = {
+          import org.apache.spark.sql.types._
+          (x, col.tform.sparkType) match {
+            case (_: java.lang.Byte, ByteType) | (_: java.lang.Short, ShortType) |
+                (_: java.lang.Integer, IntegerType) |
+                (_: java.lang.Long, LongType) |
+                (_: java.lang.Double, DoubleType) => bd(x.toString)
+            case _ => None
+          }
+        }
+        def all(x: Any)(holds: (BigDecimal, BigDecimal, BigDecimal) => Boolean) =
+          neverNull && (for {
+            q <- literal(x)
+            (mn, mx) <- stats(hdu.header, phys)
+          } yield holds(mn, mx, q)).contains(true)
+        f match {
+          case IsNotNull(_) => neverNull
+          case EqualTo(_, x) => all(x)((mn, mx, q) => mn == q && mx == q)
+          case GreaterThan(_, x) => all(x)((mn, _, q) => mn > q)
+          case GreaterThanOrEqual(_, x) => all(x)((mn, _, q) => mn >= q)
+          case LessThan(_, x) => all(x)((_, mx, q) => mx < q)
+          case LessThanOrEqual(_, x) => all(x)((_, mx, q) => mx <= q)
+          case _ => false
+        }
+      }
+    case _ => false
+  }
+
   /** True iff the header's stats for 1-based physical column
     * `physIdx+1` prove `f` matches no row. BigDecimal domain: exact for
     * int64 stats at any magnitude AND for float stats (Double.toString
     * round-trips); NaN/Infinity text fails the parse and disables the
     * skip. */
   def excludes(f: Filter, h: core.FitsHeader, physIdx: Int): Boolean = {
-    def bd(s: String): Option[BigDecimal] =
-      scala.util.Try(BigDecimal(s.trim)).toOption
     def v(x: Any): Option[BigDecimal] = x match {
       // Float literals widen to DOUBLE first: the writer tracks float
       // columns in the widened-double domain (exact, order-preserving),
@@ -610,11 +797,7 @@ private[fits] object FitsStats {
       case n: java.lang.Number => bd(n.toString)
       case _ => None
     }
-    val stats = for {
-      mn <- h.values.get(s"GMIN${physIdx + 1}").flatMap(bd)
-      mx <- h.values.get(s"GMAX${physIdx + 1}").flatMap(bd)
-    } yield (mn, mx)
-    stats.exists { case (mn, mx) =>
+    stats(h, physIdx).exists { case (mn, mx) =>
       f match {
         case EqualTo(_, x) => v(x).exists(q => q < mn || q > mx)
         case GreaterThan(_, x) => v(x).exists(q => mx <= q)
@@ -717,13 +900,14 @@ object FitsAggScan {
   val KindMaxIdx = 2
 }
 
-/** Metadata-only aggregates, answered on the driver from header
-  * metadata alone and planned as ONE partition holding the final row:
-  * COUNT(*) = Σ NAXIS2 over the target HDUs, MIN(index) = 0 and
-  * MAX(index) = max(NAXIS2)−1 over the HDUs that have rows, NULL
-  * extrema when none has (an all-empty archive counts 0). */
-final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
-    extends Scan with Batch with SupportsReportStatistics with Logging {
+/** Metadata-only aggregates, answered on the driver from the slices
+  * the row scan `rows` plans for the same pushed filters, and planned
+  * as ONE partition holding the final row: COUNT(*) = Σ slice rows,
+  * MIN/MAX(index) = the first and last planned index, NULL extrema when
+  * no slice has rows (an all-empty archive counts 0).
+  * [[FitsHeaderAnswer]] returns the row without a job. */
+final class FitsAggScan(res: FitsResolution, rows: FitsScan, kinds: Array[Int])
+    extends Scan with Batch with SupportsReportStatistics {
   import FitsAggScan._
   /** Exactly one row of longs: joins against it plan as broadcasts. */
   override def estimateStatistics(): Statistics = new Statistics {
@@ -744,56 +928,42 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
     }.toSeq)
   override def toBatch: Batch = this
   override def description(): String =
-    s"FITS ${res.pathSpec} hdu=${res.hduSpec} [metadata-only aggregate]"
+    s"FITS ${res.pathSpec} hdu=${res.hduSpec} [metadata-only aggregate]" +
+      rows.pushedDescription
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val firstSchema = res.inferredSchema
-    val rowCounts = FitsFiles.parMap(res.files, 16)(p => p -> res.scanFile(p))
-      .flatMap { case (path, hdus) =>
-      val missing = res.missingHduTokens(hdus)
-      if (missing.nonEmpty && res.mode == "FAILFAST")
-        throw new IllegalArgumentException(
-          s"$path has no HDU ${missing.mkString(",")}")
-      res.hduIndicesFor(hdus).flatMap { idx =>
-        val meta = res.targetMetaAt(hdus, idx)
-        // multi-HDU: non-data HDUs contribute no rows (see planFor)
-        if (res.isMultiHdu && !(meta.isReadable && meta.rowBytes > 0)) None
-        else if (meta.schema != firstSchema) {
-          if (res.mode == "FAILFAST") throw new IllegalArgumentException(
-            s"$path HDU $idx schema differs from first file's")
-          None
-        } else Some(meta.nRows)
-      }
-    }
-    Array(FitsAggPartition(rowCounts.sum,
-      rowCounts.filter(_ > 0).maxOption.fold(-1L)(_ - 1), kinds))
+  /** The final row, in [[readSchema]] order. */
+  private[fits] lazy val answer: org.apache.spark.sql.catalyst.InternalRow = {
+    val slices = rows.slicesFor(res.files).map(_._1).filter(_.numRows > 0)
+    val first = slices.map(_.firstRowIndex).minOption
+    val last = slices.map(p => p.firstRowIndex + p.numRows - 1).maxOption
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      kinds.map[Any] {
+        case KindCount => slices.map(_.numRows).sum
+        case KindMinIdx => first.map(Long.box).orNull
+        case _ => last.map(Long.box).orNull
+      })
   }
+
+  override def planInputPartitions(): Array[InputPartition] =
+    Array(FitsAggPartition(answer))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
         new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
           private var done = false
-          private val part = p.asInstanceOf[FitsAggPartition]
           override def next(): Boolean = !done
           override def get(): org.apache.spark.sql.catalyst.InternalRow = {
             done = true
-            val hasRows = part.maxIdx >= 0
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              part.kinds.map[Any] {
-                case KindCount => part.count
-                case KindMinIdx => if (hasRows) 0L else null
-                case _ => if (hasRows) part.maxIdx else null
-              })
+            p.asInstanceOf[FitsAggPartition].row
           }
           override def close(): Unit = ()
         }
     }
 }
 
-/** The final metadata-aggregate row: total row count, and the largest
-  * row index of any target HDU (−1 when no HDU has rows). */
-final case class FitsAggPartition(count: Long, maxIdx: Long, kinds: Array[Int])
+/** The final metadata-aggregate row. */
+final case class FitsAggPartition(row: org.apache.spark.sql.catalyst.InternalRow)
     extends InputPartition
 
 final class FitsScan(res: FitsResolution, tableSchema: StructType,
@@ -801,35 +971,15 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     lineRange: Option[(Long, Long)] = None,
     metaCols: Array[String] = Array.empty,
     rowRange: Option[(Long, Long)] = None,
-    valueFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    valueFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+    exactFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with Logging {
 
-  /** True iff the file's target-HDU header stats prove a pushed value
-    * predicate matches no row — the file drops from the plan entirely.
-    * Binding is positional, like planFor: the filter's TABLE name maps
-    * to a tableSchema position, then through the `columns` selection
-    * (TTYPE-name keyed, per file) to the physical 1-based FITS column
-    * the GMINn/GMAXn cards describe. */
-  private def statsExclude(hdus: Vector[Hdu], idx: Int): Boolean =
-    valueFilters.nonEmpty && (hdus(idx).meta match {
-      case full: HduMeta.Bintable =>
-        val header = hdus(idx).header
-        valueFilters.exists { f =>
-          FitsStats.colOf(f).exists { name =>
-            val p = tableSchema.fieldIndex(name)
-            val phys = res.columnsOption match {
-              case Some(names) if p < names.length =>
-                full.columns.indexWhere(_.name == names(p))
-              case Some(_) => -1
-              case None => p
-            }
-            phys >= 0 && phys < full.columns.length &&
-              FitsStats.excludes(f, header, phys)
-          }
-        }
-      case _ => false
-    })
+  /** True iff the HDU's header stats prove a pushed value predicate
+    * matches no row — it drops from the plan entirely. */
+  private def statsExclude(hdu: Hdu): Boolean =
+    FitsStats.skips(res, tableSchema, valueFilters, hdu)
 
   /** (files skipped, data bytes skipped) by value-predicate stats in
     * the last partition plan — test/telemetry surface. */
@@ -905,32 +1055,16 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     * FITS auto-broadcasts exactly like a parquet one would. The size is
     * scaled down to the pruned column fraction so projection-heavy
     * plans see the bytes they will actually move. */
-  /** One header walk per file PER SCAN, shared by estimateStatistics
-    * and planInputPartitions — both run during planning of the same
-    * query, and at a 100k-file archive a second full walk doubles the
-    * driver's planning IO for nothing (headers are immutable within a
-    * query by the standard file-source contract). */
-  @transient private lazy val scanFileMetas: Seq[(Path, Vector[Hdu])] =
-    FitsFiles.parMap(res.files, 16)(p => p -> res.scanFile(p))
-
   private lazy val stats: (Long, Long) = {
-    // targetMeta (not raw meta): the `columns` option reorders/prunes
-    // the column set that tableSchema's positions refer to
-    val metas = scanFileMetas
-      .flatMap { case (_, hdus) =>
-        res.hduIndicesFor(hdus)
-          .filter(i => i >= 0 && i < hdus.length)
-          // value-domain skip counts in the ESTIMATE too: a selective
-          // predicate over a sorted archive must report the pruned
-          // size, or Catalyst sizes joins as if every file scanned
-          .filterNot(i => statsExclude(hdus, i))
-          .map(i => res.targetMetaAt(hdus, i))
+    // only HDUs that plan rows count, with the `columns` option applied;
+    // value-domain skips count in the ESTIMATE too: a selective
+    // predicate over a sorted archive must report the pruned size, or
+    // Catalyst sizes joins as if every file scanned
+    val metas = res.fileHdus.flatMap { case (path, hdus) =>
+      res.rowHdus(path, hdus)(_ => ()).collect {
+        case (i, m) if !statsExclude(hdus(i)) => m
       }
-      // schema-mismatched HDUs never plan (see planFor), so they must
-      // not inflate the estimate either — and a mismatched bintable
-      // could have fewer columns than the pruned positions index into
-      .filter(m => m.isReadable && m.rowBytes > 0 &&
-        m.schema == res.inferredSchema)
+    }
     // prune-aware row width, bound positionally like planFor (user
     // schemas rename columns) — computed PER FILE: heterogeneous unions
     // (e.g. differing string widths under PERMISSIVE) have different
@@ -993,7 +1127,14 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
         s" runtimeRuns=$shown$more"
       }.getOrElse("") +
       (if (valueFilters.nonEmpty)
-        s" statsFilters=${valueFilters.mkString(",")}" else "")
+        s" statsFilters=${valueFilters.mkString(",")}" else "") +
+      pushedDescription
+
+  /** The conjuncts this scan answers exactly, which no Filter re-checks,
+    * as explain lists them. */
+  private[fits] def pushedDescription: String =
+    if (exactFilters.isEmpty) ""
+    else s" pushed=${exactFilters.mkString("[", ", ", "]")}"
 
   override def planInputPartitions(): Array[InputPartition] =
     planFor(res.files)
@@ -1045,46 +1186,22 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     // Per-file structural scans, parallelized on the driver: one header
     // walk (a few KB of reads) per file. The reference re-walks every
     // file inside every task instead (FitsLib.scala:181-202). The batch
-    // path reuses the walk estimateStatistics already did; the
-    // micro-batch stream passes per-batch file subsets and walks those.
+    // path reuses the resolution's walk; the micro-batch stream passes
+    // per-batch file subsets and walks those.
     val fileMetas: Seq[(Path, Vector[Hdu])] =
-      if (files eq res.files) scanFileMetas
+      if (files eq res.files) res.fileHdus
       else FitsFiles.parMap(files, 16)(p => p -> res.scanFile(p))
 
-    val firstSchema = res.inferredSchema
     var statsSkipFiles = 0
     var statsSkipBytes = 0L
     val readable = fileMetas.flatMap { case (path, hdus) =>
-      val idxs = res.hduIndicesFor(hdus)
-      // EVERY unresolved token reports through the mode — a list
-      // "1,9" with only HDU 1 present must FAILFAST like a bare "9"
-      // would, not silently return HDU 1's rows
-      val missing = res.missingHduTokens(hdus)
-      if (missing.nonEmpty)
-        failOrWarn(s"$path has no HDU ${missing.mkString(",")}; skipping")
-      if (idxs.isEmpty) {
-        if (res.isAllHdu)
-          failOrWarn(s"$path has no readable HDU; skipping")
-        Seq.empty
-      } else idxs.flatMap { idx =>
-        val meta = res.targetMetaAt(hdus, idx)
-        // multi-HDU union: non-data HDUs (the MEF primary under `all`)
-        // skip silently; a READABLE HDU whose schema differs is a real
-        // union conflict and goes through the mode handling below
-        if (res.isMultiHdu &&
-          !(meta.isReadable && meta.nRows > 0 && meta.rowBytes > 0)) None
-        else if (meta.schema != firstSchema) {
-          failOrWarn(s"$path HDU $idx schema ${meta.schema.simpleString} " +
-            s"differs from first file's ${firstSchema.simpleString}; skipping")
+      res.rowHdus(path, hdus)(failOrWarn).flatMap { case (idx, meta) =>
+        if (statsExclude(hdus(idx))) {
+          // value-domain skip: header stats prove no row matches
+          statsSkipFiles += 1
+          statsSkipBytes += hdus(idx).bounds.dataBytes
           None
-        } else if (meta.isReadable && meta.nRows > 0 && meta.rowBytes > 0) {
-          if (statsExclude(hdus, idx)) {
-            // value-domain skip: header stats prove no row matches
-            statsSkipFiles += 1
-            statsSkipBytes += hdus(idx).bounds.dataBytes
-            None
-          } else Some((path, hdus(idx).bounds, meta, idx))
-        } else None
+        } else Some((path, hdus(idx).bounds, meta, idx))
       }
     }
     lastStatsSkip = (statsSkipFiles, statsSkipBytes)

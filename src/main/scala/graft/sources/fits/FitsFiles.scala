@@ -1,13 +1,14 @@
 package graft.sources.fits
 
 import java.io.FileNotFoundException
-import java.util.concurrent.{Executors, TimeoutException}
+import java.util.concurrent.{Executors, ThreadFactory, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** File discovery with the reference's surface (FitsSourceRelation.scala:
   * 133-177): a single file, a directory (recursive, keeps only `*.fits`),
@@ -39,32 +40,83 @@ object FitsFiles {
       case Some(st) => if (st.isDirectory) listFits(fs, path) else Seq(path)
       case None =>
         // not a literal path — try as a glob
-        val matched = Option(fs.globStatus(path)).getOrElse(Array.empty)
-        matched.toSeq.flatMap { st =>
+        glob(fs, path).toSeq.flatMap { st =>
           if (st.isDirectory) listFits(fs, st.getPath) else Seq(st.getPath)
         }
     }
   }
 
+  private val GlobChars = "*?[{\\"
+  private def hasGlob(s: String): Boolean = s.exists(GlobChars.contains(_))
+
+  /** `fs.globStatus(pattern)`, same entries in the same sorted order.
+    * Hadoop's glob builds the statuses of every leaf directory one
+    * directory after another; when the parent has wildcards, the parent
+    * is globbed first and each matched directory's leaf is globbed in
+    * parallel, still by Hadoop's own matcher. A brace that spans `/`
+    * cannot be split at the last separator, and a leaf with `:` would
+    * parse as a URI scheme on its own: both keep the one call. */
+  private[fits] def glob(fs: FileSystem, pattern: Path): Array[FileStatus] = {
+    def statuses(p: Path) = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
+    val parent = pattern.getParent
+    val braceSpansSlash = "\\{[^}]*/".r.findFirstIn(pattern.toString).isDefined
+    val leaf = pattern.getName
+    if (parent == null || braceSpansSlash || leaf.contains(':') ||
+      !hasGlob(parent.toString)) statuses(pattern)
+    else {
+      val dirs = statuses(parent).filter(_.isDirectory).toSeq
+      val out = parMap(dirs, 16)(d => statuses(new Path(d.getPath, leaf))).flatten.toArray
+      java.util.Arrays.sort(out.asInstanceOf[Array[Object]])
+      out
+    }
+  }
+
+  /** Daemon threads shared by every [[parMap]] call: threads idle for a
+    * minute exit, so the pool costs nothing between planning bursts. */
+  private lazy val pool = Executors.newCachedThreadPool(new ThreadFactory {
+    private val n = new AtomicInteger()
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"fits-parmap-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  })
+
   /** Bounded driver-side parallel map (used for per-file header walks —
     * one small positioned read per HDU, latency-bound on object stores).
-    * Results are awaited in order; the pool runs items in order too, so
-    * the item awaited has been running for the whole wait, and one that
-    * outlasts `timeout` fails the map naming that item.
+    * At most `threads` workers of the shared pool take items in order;
+    * results are awaited in order, so the item awaited has been running
+    * for the whole wait, and one that outlasts `timeout` fails the map
+    * naming that item. A failed map interrupts its workers.
     */
   def parMap[A, B](xs: Seq[A], threads: Int,
       timeout: FiniteDuration = ItemTimeout)(f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)
     else {
-      val pool = Executors.newFixedThreadPool(math.min(threads, xs.length))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try xs.toVector.map(x => x -> Future(f(x))).map { case (x, fut) =>
-        try Await.result(fut, timeout)
-        catch { case _: TimeoutException =>
-          throw new TimeoutException(s"no result for $x after $timeout")
+      val items = xs.toVector
+      val results = Vector.fill(items.length)(Promise[B]())
+      val next = new AtomicInteger()
+      @volatile var stopped = false
+      val worker: Runnable = () => {
+        var i = next.getAndIncrement()
+        while (i < items.length && !stopped) {
+          try results(i).success(f(items(i)))
+          catch { case t: Throwable => results(i).failure(t) }
+          i = next.getAndIncrement()
         }
       }
-      finally pool.shutdownNow()
+      val workers = Seq.fill(math.min(threads, items.length))(pool.submit(worker))
+      try items.indices.map { i =>
+        try Await.result(results(i).future, timeout)
+        catch { case _: TimeoutException =>
+          throw new TimeoutException(s"no result for ${items(i)} after $timeout")
+        }
+      }
+      catch { case e: Throwable =>
+        stopped = true
+        workers.foreach(_.cancel(true))
+        throw e
+      }
     }
 
   /** Every `*.fits` file under `dir` (suffix matched case-insensitively),

@@ -20,6 +20,24 @@ class StreamingSpec extends SparkTestBase {
     } finally spark.conf.unset(key)
   }
 
+  test("a replay that outlasts its bound fails naming its query and " +
+      "leaves no active stream") {
+    val dir = java.nio.file.Files.createTempDirectory("slow-replay").toString
+    spark.range(4).coalesce(1).write.mode("overwrite").parquet(dir)
+    val slow = udf((x: Long) => { Thread.sleep(2000); x })
+    val in = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .parquet(dir).select(slow(col("id")).as("id"))
+    val name = "slow_replay_tbl"
+    try {
+      val e = intercept[java.util.concurrent.TimeoutException] {
+        Streaming.runToTable(spark, in, name, "append",
+          scala.concurrent.duration.Duration(200, "millis"))
+      }
+      assert(e.getMessage.contains(name), e.getMessage)
+      assert(spark.streams.active.isEmpty, spark.streams.active.toSeq)
+    } finally spark.catalog.dropTempView(name)
+  }
+
   test("replay checkpoints are single-use: repeat runs re-ingest from " +
       "offset zero and leave no checkpoint dirs behind") {
     // r18 optimization round: runToTable places its per-run checkpoint

@@ -82,14 +82,77 @@ class FitsCountPushdownSpec extends SparkTestBase
     assert(agg.collect().head.getLong(0) == 19999L) // Index happens 0-based
   }
 
-  test("filtered MIN/MAX still scans (pushdown declined)") {
+  test("exactly filtered MIN/MAX answers from headers") {
+    // a plain image slices any ImgIndex range exactly, so the filter
+    // leaves the plan and the aggregate reaches the scan
     import org.apache.spark.sql.functions._
     val img = spark.read.format("fits").option("hdu", 2)
       .load(s"$res/dirIm/0_i_am_not_empty.fits")
     val agg = img.filter(col("ImgIndex") >= 10).agg(min(col("ImgIndex")))
     val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("metadata-only aggregate"), plan)
+    assert(plan.contains("metadata-only aggregate"), plan)
     assert(agg.collect().head.getLong(0) == 10L)
+  }
+
+  /** Spark jobs that `body` starts on this thread. Jobs carry the
+    * thread's job group, and a sentinel job started after `body` marks
+    * the point where the listener has seen every earlier job. */
+  private def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("header answers run no Spark job; BatchScanExec stays in the plan") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val tbl = spark.read.format("fits").option("hdu", 1).load(s"$res/dir")
+    val img = spark.read.format("fits").option("hdu", 2)
+      .load(s"$res/dirIm/0_i_am_not_empty.fits")
+    val idx = col("_row_index")
+    val cases: Seq[(DataFrame, Seq[Long])] = Seq(
+      tbl.agg(count(lit(1))) -> Seq(27000L),
+      tbl.agg(min(idx), max(idx), count(lit(1))) -> Seq(0L, 19999L, 27000L),
+      tbl.filter(idx.between(10, 99)).agg(min(idx), max(idx), count(lit(1))) ->
+        Seq(10L, 99L, 180L),
+      img.agg(min("ImgIndex"), max("ImgIndex")) -> Seq(0L, 154L),
+      img.filter(col("ImgIndex") < 20).agg(min("ImgIndex"), max("ImgIndex"),
+        count(lit(1))) -> Seq(0L, 19L, 20L),
+      img.filter(idx > 100).agg(min(idx), max(idx)) -> Seq(101L, 154L))
+    cases.foreach { case (q, want) =>
+      var got: Seq[Long] = Nil
+      assert(jobsRunBy { got = q.collect().head.toSeq.map(_.asInstanceOf[Long]) } == 0,
+        q.queryExecution.executedPlan)
+      assert(got == want, q.queryExecution.executedPlan)
+      assert(q.queryExecution.sparkPlan.collectFirst {
+        case b: BatchScanExec => b.scan
+      }.exists(_.isInstanceOf[FitsAggScan]), q.queryExecution.sparkPlan)
+    }
+    var n = 0L
+    assert(jobsRunBy { n = tbl.count() } == 0)
+    assert(n == 27000L)
+    // a data aggregate still runs its job
+    assert(jobsRunBy { tbl.agg(max("Index")).collect() } > 0)
   }
 
   /** The scan answers with the final row in one task: no shuffle and

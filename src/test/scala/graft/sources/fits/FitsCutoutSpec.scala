@@ -10,9 +10,10 @@ import graft.SparkTestBase
 /** Image-cutout pushdown: `ImgIndex` range predicates reach the FITS
   * scan and clamp the planned byte ranges, so a cutout of a huge image
   * plans (and reads) only the line band it covers — the 100 TB imaging
-  * access pattern. Correctness never depends on the clamp: Spark keeps
-  * every predicate as a residual filter, so these tests assert BOTH
-  * the row values and the plan/partition shape. */
+  * access pattern. Plain images clamp exactly and the range leaves the
+  * plan; compressed images widen to tile bands under a residual
+  * filter. These tests assert BOTH the row values and the
+  * plan/partition shape. */
 class FitsCutoutSpec extends SparkTestBase {
 
   private val width = 16

@@ -81,6 +81,44 @@ class FitsFilesSpec extends AnyFunSuite {
     }
   }
 
+  test("wildcard-parent globs resolve what one globStatus call does") {
+    val root = Files.createTempDirectory("graft-glob").toFile
+    // `n01-x` sorts before `n01/` by path, `n03` is a file that the
+    // parent pattern matches, `m00` is outside it
+    val rels = Seq("n00", "n01", "n02", "n01-x").flatMap(d =>
+      Seq("f0007.fits", "f0107.fits", "f0008.fits", "g0007.fits").map(f => s"$d/$f")) ++
+      Seq("n03", "m00/f0007.fits", "n02/sub/f0207.fits")
+    rels.foreach { rel =>
+      val f = new File(root, rel)
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, Array[Byte](0))
+    }
+    def rm(f: File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    try {
+      val fs = new Path(root.getPath).getFileSystem(conf)
+      val specs = Seq("n*/f??07.fits", "n0[0-2]/*.fits", "{n01,n02}/f*.fits",
+        "{n00/f0007.fits,n02/f0008.fits}", "n*/f0008.fits", "*/*/f*.fits",
+        "n*/sub")
+      specs.map(sp => s"${root.getPath}/$sp").foreach { spec =>
+        val one = Option(fs.globStatus(new Path(spec))).getOrElse(Array.empty)
+        assert(one.nonEmpty, spec)
+        assert(FitsFiles.glob(fs, new Path(spec)).map(_.getPath.toString).toSeq ==
+          one.map(_.getPath.toString).toSeq, spec)
+        // a comma inside braces would split the spec into a path list
+        if (!spec.contains(','))
+          assert(FitsFiles.resolve(spec, conf).map(_.toString) ==
+            listFilesResolve(spec).map(_.toString), spec)
+      }
+      val none = s"${root.getPath}/n*/zz*.fits"
+      assert(listFilesResolve(none).isEmpty)
+      val e = intercept[IllegalArgumentException](FitsFiles.resolve(none, conf))
+      assert(e.getMessage == s"No FITS files found for path '$none'", e.getMessage)
+    } finally rm(root)
+  }
+
   test("parMap keeps order and fails naming an item that outlasts its wait") {
     assert(FitsFiles.parMap(1 to 50, 4)(_ * 2) == (1 to 50).map(_ * 2))
     val e = intercept[TimeoutException] {

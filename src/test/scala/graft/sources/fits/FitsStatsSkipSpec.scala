@@ -15,8 +15,7 @@ import graft.SparkTestBase
   * scan planner drops whole files whose stats provably exclude a
   * pushed comparison — the data-skipping layer fixed-width FITS rows
   * otherwise lack (the reference has no predicate pushdown at all).
-  * Always a superset contract: filters stay residual, absent or
-  * NaN-poisoned stats never skip. */
+  * Absent or NaN-poisoned stats never skip. */
 class FitsStatsSkipSpec extends SparkTestBase {
   import spark.implicits._
 

@@ -735,7 +735,9 @@ private[fits] object FitsStats {
 
   /** True iff `hdu` proves that every row matches the [[provable]]
     * conjunct `f`. The column must never read as NULL (a numeric scalar
-    * with no TNULLn card), since stats leave nulls out. The literal must
+    * with no TNULLn card), since stats leave nulls out. A float null is
+    * no NULL here: the writer stores it as 0.0, the reader returns 0.0,
+    * and the writer's stats count that 0.0. The literal must
     * have the column's own type, not Float (see [[excludes]]): Spark
     * then compares in a type whose order the BigDecimal domain keeps
     * exactly. A float column holding NaN has no stats (the writer's

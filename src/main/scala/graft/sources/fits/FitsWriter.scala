@@ -365,13 +365,16 @@ final class FitsDataWriter(dirSpec: String, schema: StructType,
   private val mdDims: Array[Array[Int]] = new Array(fields.length)
   private var nRows = 0L
 
-  // Per-column min/max over non-null SCALAR numeric values, emitted at
-  // commit as reserved GMINn/GMAXn cards (ignorable by other readers;
-  // FITS 4.0 §4.1.2.3 user keywords). The scan planner uses them to
-  // drop whole files whose value range excludes a pushed predicate —
-  // the data-skipping layer fixed-width FITS rows otherwise lack.
-  // A NaN poisons the column's stats (Spark orders NaN above every
-  // value, so a NaN-bearing column has no usable max).
+  // Per-column min/max over the SCALAR numeric values a reader gets
+  // back, emitted at commit as reserved GMINn/GMAXn cards (ignorable by
+  // other readers; FITS 4.0 §4.1.2.3 user keywords). The scan planner
+  // uses them to drop whole files whose value range excludes a pushed
+  // predicate — the data-skipping layer fixed-width FITS rows otherwise
+  // lack — and to prove that every row matches one. An integer null
+  // reads back as NULL (TNULLn) and stays out; a float null is stored,
+  // and reads back, as 0.0, so that placeholder counts. A NaN poisons
+  // the column's stats (Spark orders NaN above every value, so a
+  // NaN-bearing column has no usable max).
   private val statLongMin = Array.fill(fields.length)(Long.MaxValue)
   private val statLongMax = Array.fill(fields.length)(Long.MinValue)
   private val statDblMin = Array.fill(fields.length)(Double.MaxValue)
@@ -690,6 +693,7 @@ final class FitsDataWriter(dirSpec: String, schema: StructType,
           } else flatWrite(i, arr, at)
         case dt =>
           if (!nul) trackStat(i, dt, row)
+          else if (dt == FloatType || dt == DoubleType) trackDbl(i, 0d)
           writeScalar(i, dt, nul, row.get(i, dt))
       }
       i += 1

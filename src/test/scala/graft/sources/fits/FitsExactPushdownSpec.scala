@@ -162,6 +162,27 @@ class FitsExactPushdownSpec extends SparkTestBase
     assert(check(fits(flt, 1), "x", "float", exact = false)(_ > 0.05f).length == 2)
   }
 
+  test("a float null reads as 0.0, and the stats count that 0.0") {
+    val dbl = tmp("dnull")
+    Seq((1L, Some(10.0)), (2L, None)).toDF("id", "d")
+      .coalesce(1).write.format("fits").mode("overwrite").save(dbl)
+    val d = fits(dbl, 1)
+    val part = new java.io.File(dbl).listFiles().filter(_.getName.endsWith(".fits")).head
+    val h = core.FitsStructure.scan(
+      org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration()),
+      new org.apache.hadoop.fs.Path(part.toString))(1).header
+    assert(h.getDouble("GMIN2").contains(0.0) && h.getDouble("GMAX2").contains(10.0), h)
+    // [0, 10] neither proves nor excludes these: the 0.0 row decides
+    assert(check(d, "d", "double", exact = false)(_ >= 5.0).length == 1)
+    assert(check(d, "d", "double", exact = false)(_ < 1.0).length == 1)
+    assert(check(d, "d", "double", exact = true)(_ >= 0.0).length == 2)
+
+    val flt = tmp("fnull")
+    Seq((1L, Some(10f)), (2L, None)).toDF("id", "x")
+      .coalesce(1).write.format("fits").mode("overwrite").save(flt)
+    assert(check(fits(flt, 1), "x", "float", exact = false)(_ < 1.0f).length == 1)
+  }
+
   test("filter(exact).limit(n) pushes the limit under the exact range") {
     val df = withIndex(fits(table, 1))
     val got = check(df, "_row_index", "long", exact = true, _.limit(7))(_ >= 500L)

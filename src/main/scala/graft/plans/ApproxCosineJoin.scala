@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences, Expression, GenericInternalRow}
@@ -234,7 +234,7 @@ final case class ApproxCosineJoinExec(
   }
 }
 
-/** User-facing API + extension registration. */
+/** User-facing API. */
 object ApproxCosineJoin {
 
   /** `left ⋈_{cos(lv, rv) ≥ t}` approximate join (see class doc).
@@ -244,7 +244,7 @@ object ApproxCosineJoin {
       leftVecCol: String, rightVecCol: String,
       threshold: Double): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    GraftExtensions.ensure(spark)
     val lPlan = org.apache.spark.sql.graftx.Bridge.logicalPlan(left)
     val rPlan = org.apache.spark.sql.graftx.Bridge.logicalPlan(right)
     def attr(p: LogicalPlan, name: String): Attribute =
@@ -253,29 +253,5 @@ object ApproxCosineJoin {
     val node = ApproxCosineJoinNode(lPlan, rPlan,
       attr(lPlan, leftVecCol), attr(rPlan, rightVecCol), threshold)
     org.apache.spark.sql.graftx.Bridge.ofRows(spark, node)
-  }
-
-  private def ensureStrategy(spark: SparkSession): Unit = {
-    val es = spark.experimental.extraStrategies
-    if (!es.contains(ApproxCosineJoinStrategy))
-      spark.experimental.extraStrategies = es :+ ApproxCosineJoinStrategy
-  }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` registration:
-  * the planner strategies AND the full SQL function surface, so a
-  * SQL-only deployment (spark-sql, Thrift server, PySpark without
-  * Scala access) sets one conf and gets everything. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => ApproxCosineJoinStrategy)
-    e.injectPlannerStrategy(_ => graft.sources.fits.FitsHeaderAnswer)
-    graft.functions.GraftFunctions.sqlBuilders.foreach { case (name, builder) =>
-      e.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.functions", name),
-        builder))
-    }
   }
 }

@@ -56,6 +56,8 @@ class FitsDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
+    // before the query that reads the table is optimized
+    graft.plans.GraftExtensions.ensure(SparkSession.active)
     val props = properties.asScala.toMap
     // taken and cleared: a reused provider never serves a stale listing
     val cached = inferred
@@ -543,7 +545,6 @@ final class FitsScanBuilder(res: FitsResolution, tableSchema: StructType)
       new FitsScan(res, tableSchema, required, limit, lineRange,
         metaCols, rowRange, valueFilters, exactFilters)
     else {
-      FitsHeaderAnswer.ensureStrategy(SparkSession.active)
       // the rows the aggregate counts: no column is decoded
       new FitsAggScan(res, new FitsScan(res, tableSchema, StructType(Nil),
         limit, lineRange, Array.empty, rowRange, valueFilters, exactFilters),

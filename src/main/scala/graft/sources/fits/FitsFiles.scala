@@ -22,12 +22,27 @@ object FitsFiles {
   val ItemTimeout: FiniteDuration = 5.minutes
 
   def resolve(pathSpec: String, conf: Configuration): Seq[Path] = {
-    val out = pathSpec.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+    val out = specs(pathSpec).map(_.trim).filter(_.nonEmpty)
       .flatMap(one(_, conf))
     if (out.isEmpty)
       throw new IllegalArgumentException(
         s"No FITS files found for path '$pathSpec'")
     out
+  }
+
+  /** `pathSpec` split at the commas outside `{...}`: a comma inside
+    * braces separates the alternatives of one Hadoop glob. */
+  private def specs(pathSpec: String): Seq[String] = {
+    var depth = 0
+    val cuts = pathSpec.indices.filter { i =>
+      pathSpec(i) match {
+        case '{' => depth += 1; false
+        case '}' => depth = math.max(0, depth - 1); false
+        case c => c == ',' && depth == 0
+      }
+    }
+    (-1 +: cuts :+ pathSpec.length).sliding(2)
+      .map { case Seq(a, b) => pathSpec.substring(a + 1, b) }.toSeq
   }
 
   private def one(spec: String, conf: Configuration): Seq[Path] = {

@@ -1,7 +1,6 @@
 package graft.sources.fits
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -17,8 +16,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * stays in the plan as its child: explain output, plan inspection and
   * a parent that consumes the node as an RDD all see the usual scan.
   *
-  * Registered per session when a FITS scan pushes an aggregate, and by
-  * [[graft.plans.GraftExtensions]]. */
+  * Registered by [[graft.plans.GraftExtensions]], and per session when
+  * a FITS table loads. */
 object FitsHeaderAnswer extends Strategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Project(list, rel: DataSourceV2ScanRelation)
@@ -27,11 +26,6 @@ object FitsHeaderAnswer extends Strategy {
       case _ => Nil
     }
     case _ => Nil
-  }
-
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val es = spark.experimental.extraStrategies
-    if (!es.contains(this)) spark.experimental.extraStrategies = es :+ this
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
+import org.apache.spark.sql.types.{AtomicType, DataType}
 
 /** Minimal bridge to Spark's `private[sql]` Column↔Expression and
   * Dataset↔LogicalPlan converters. Lives inside the
@@ -19,6 +20,9 @@ object Bridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(ClassicConversions.castToImpl(spark), plan)
+
+  /** `AtomicType` is `private[sql]`. */
+  def isAtomic(t: DataType): Boolean = t.isInstanceOf[AtomicType]
 
   /** Frees the storage blocks behind a `localCheckpoint()`ed frame.
     * `catalog.clearCache()` does not touch checkpoint RDD blocks, so an

@@ -37,6 +37,14 @@ class GraftExtensionsSpec extends SparkTestBase {
         "SELECT topk_agg(CAST(id AS DOUBLE), id, 3) AS tk FROM range(10)")
         .head.getSeq[org.apache.spark.sql.Row](0)
       assert(tk.map(_.getLong(0)) == Seq(9L, 8L, 7L))
+      // the optimizer rule rides along without ensure(): an aggregate
+      // over an array compiles, and still sums right
+      assert(s2.experimental.extraOptimizations.isEmpty)
+      val lines = s2.range(0, 10, 1, 2)
+        .selectExpr("aggregate(array(id, 2 * id), 0L, (a, x) -> a + x) AS t")
+      assert(lines.queryExecution.optimizedPlan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[CompiledArrayAggregate]))))
+      assert(lines.selectExpr("sum(t)").head.getLong(0) == 135L)
       // the planner strategy rides along: the custom join still plans
       val planned = {
         import s2.implicits._

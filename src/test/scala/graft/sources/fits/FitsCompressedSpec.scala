@@ -472,9 +472,9 @@ class FitsCompressedSpec extends SparkTestBase {
         r.getLong(1) == i && r.getSeq[Short](0) == lines(i) })
       // throughput of the scan+decode itself: sum(size(Image)) forces
       // every tile through decompress + vector fill + ColumnarToRow but
-      // keeps downstream eval trivial (a per-element lambda like
-      // aggregate() is interpreted and would dominate the clock; a
-      // collect() would time driver-side boxing). Best-of-3 — a single
+      // keeps downstream eval trivial (aggregate() compiles, but its
+      // per-pixel loop would still add to the clock; a collect() would
+      // time driver-side boxing). Best-of-3 — a single
       // cold pass mostly measures job-scheduling overhead at this size
       val sumQ = df.selectExpr("size(Image) AS s")
       val expect = 16000L * width

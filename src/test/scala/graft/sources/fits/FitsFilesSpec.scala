@@ -8,11 +8,12 @@ import scala.concurrent.duration._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestBase
 
 /** File discovery: every path spec resolves to the file list the
   * `listFiles`-based listing gave, and `parMap` never waits unbounded. */
-class FitsFilesSpec extends AnyFunSuite {
+class FitsFilesSpec extends SparkTestBase {
 
   private val conf = new Configuration()
 
@@ -107,15 +108,36 @@ class FitsFilesSpec extends AnyFunSuite {
         assert(one.nonEmpty, spec)
         assert(FitsFiles.glob(fs, new Path(spec)).map(_.getPath.toString).toSeq ==
           one.map(_.getPath.toString).toSeq, spec)
-        // a comma inside braces would split the spec into a path list
-        if (!spec.contains(','))
-          assert(FitsFiles.resolve(spec, conf).map(_.toString) ==
-            listFilesResolve(spec).map(_.toString), spec)
+        // a comma inside braces stays in its glob: the reference listing
+        // would split the spec into a path list
+        val want =
+          if (spec.contains(',')) one.map(_.getPath.toString).toSeq
+          else listFilesResolve(spec).map(_.toString)
+        assert(FitsFiles.resolve(spec, conf).map(_.toString) == want, spec)
       }
       val none = s"${root.getPath}/n*/zz*.fits"
       assert(listFilesResolve(none).isEmpty)
       val e = intercept[IllegalArgumentException](FitsFiles.resolve(none, conf))
       assert(e.getMessage == s"No FITS files found for path '$none'", e.getMessage)
+    } finally rm(root)
+  }
+
+  test("a brace glob and a comma list load through the data source") {
+    val root = Files.createTempDirectory("graft-brace").toFile
+    def rm(f: File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    try {
+      Seq("n01" -> 0, "n02" -> 10, "n03" -> 20).foreach { case (d, base) =>
+        spark.range(base, base + 3).coalesce(1).write.format("fits").mode("append")
+          .save(s"${root.getPath}/$d")
+      }
+      def ids(spec: String) = spark.read.format("fits").option("hdu", 1)
+        .load(spec).collect().map(_.getLong(0)).toSeq.sorted
+      assert(ids(s"${root.getPath}/{n01,n02}/*.fits") == Seq(0L, 1, 2, 10, 11, 12))
+      assert(ids(s"${root.getPath}/{n01,n03},${root.getPath}/n02") ==
+        Seq(0L, 1, 2, 10, 11, 12, 20, 21, 22))
     } finally rm(root)
   }
 

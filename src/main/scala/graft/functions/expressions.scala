@@ -142,7 +142,10 @@ case class TokenTf(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     TokenTf.eval(input.asInstanceOf[UTF8String].toString)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TokenTf.eval($c.toString())")
+    // through the module instance: the case class's own eval(InternalRow)
+    // keeps Scala from emitting a static TokenTf.eval(String) forwarder
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.TokenTf$$.MODULE$$.eval($c.toString())")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "token_tf"
@@ -153,7 +156,7 @@ object TokenTf {
   val OutType: DataType = ArrayType(StructType(Seq(
     StructField("term", StringType, nullable = false),
     StructField("tf", IntegerType, nullable = false))), containsNull = false)
-  /** Static entry point shared by the interpreted path and codegen. */
+  /** Entry point shared by the interpreted path and codegen. */
   def eval(s: String): org.apache.spark.sql.catalyst.util.ArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       TextAlgo.tokenTf(s).map { case (t, n) =>

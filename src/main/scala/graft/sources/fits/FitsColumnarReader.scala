@@ -627,22 +627,25 @@ final class FitsColumnarReader(part: FitsInputPartition,
           v.putArray(r, r, 1)
           r += 1
         }
+      // ASCII TABLE numbers: a blank or malformed field reads as NULL
       case a: TForm.AsciiInt =>
         var r = 0
         while (r < n) {
-          a.decode(buf, r * rowBytes + off) match {
-            case null => v.putNull(r)
-            case l: java.lang.Long => v.putLong(r, l.longValue())
-          }
+          val o = r * rowBytes + off
+          try
+            if (TForm.isBlank(buf, o, a.byteWidth)) v.putNull(r)
+            else v.putLong(r, a.parseLong(buf, o))
+          catch { case _: NumberFormatException => v.putNull(r) }
           r += 1
         }
       case a: TForm.AsciiReal =>
         var r = 0
         while (r < n) {
-          a.decode(buf, r * rowBytes + off) match {
-            case null => v.putNull(r)
-            case d: java.lang.Double => v.putDouble(r, d.doubleValue())
-          }
+          val o = r * rowBytes + off
+          try
+            if (TForm.isBlank(buf, o, a.byteWidth)) v.putNull(r)
+            else v.putDouble(r, a.parseDouble(buf, o))
+          catch { case _: NumberFormatException => v.putNull(r) }
           r += 1
         }
       case TForm.Str(_, len) =>

@@ -2,10 +2,11 @@ package graft.sources.fits.core
 
 import org.apache.spark.sql.types._
 
-/** FITS binary-table element type (TFORMn), the single registry that
-  * unifies byte width, Spark type, and decoding (the reference keeps
-  * three scattered copies: FitsSchema.scala:42-77,
-  * FitsHduBintable.scala:232-294, FitsHdu.scala:124-235).
+/** FITS binary-table element type (TFORMn), the single registry of
+  * byte width and Spark type; the connector's columnar reader is the
+  * one decoder over it (the reference keeps three scattered copies of
+  * decode logic: FitsSchema.scala:42-77, FitsHduBintable.scala:232-294,
+  * FitsHdu.scala:124-235).
   *
   * Byte order is always big-endian (FITS standard §5.2).
   */
@@ -14,15 +15,13 @@ sealed trait ElemType {
   /** bytes per element */
   def width: Int
   def sparkType: DataType
-  /** Decodes the element starting at `off`. Returns a JVM value of the
-    * external row representation (String/Short/…/Boolean). */
-  def decode(b: Array[Byte], off: Int): Any
 }
 
 object ElemType {
   // Big-endian primitive assembly, no ByteBuffer allocation per element.
-  // Public: the row and columnar readers share these so the decode
-  // logic exists exactly once (unlike the reference's three copies).
+  // Public: the columnar reader and the tile-descriptor reads share
+  // these so the decode logic exists exactly once (unlike the
+  // reference's three copies).
   @inline def s16(b: Array[Byte], o: Int): Short =
     (((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)).toShort
   @inline def i32(b: Array[Byte], o: Int): Int =
@@ -37,40 +36,27 @@ object ElemType {
     * reading and lets boolean nulls round-trip through the writer. */
   case object L extends ElemType {
     val code = 'L'; val width = 1; val sparkType = BooleanType
-    def decode(b: Array[Byte], off: Int): Any = b(off) match {
-      case 'T' => true
-      case 'F' => false
-      case _ => null
-    }
   }
   /** FITS `B` is unsigned, but the reference maps it to signed ByteType
     * (FitsHdu.scala:214-217, asserted by ReadFitsTest.scala:310-316).
     * Kept signed for behavior compatibility; documented wart. */
   case object B extends ElemType {
     val code = 'B'; val width = 1; val sparkType = ByteType
-    def decode(b: Array[Byte], off: Int): Any = b(off)
   }
   case object I extends ElemType {
     val code = 'I'; val width = 2; val sparkType = ShortType
-    def decode(b: Array[Byte], off: Int): Any = s16(b, off)
   }
   case object J extends ElemType {
     val code = 'J'; val width = 4; val sparkType = IntegerType
-    def decode(b: Array[Byte], off: Int): Any = i32(b, off)
   }
   case object K extends ElemType {
     val code = 'K'; val width = 8; val sparkType = LongType
-    def decode(b: Array[Byte], off: Int): Any = i64(b, off)
   }
   case object E extends ElemType {
     val code = 'E'; val width = 4; val sparkType = FloatType
-    def decode(b: Array[Byte], off: Int): Any =
-      java.lang.Float.intBitsToFloat(i32(b, off))
   }
   case object D extends ElemType {
     val code = 'D'; val width = 8; val sparkType = DoubleType
-    def decode(b: Array[Byte], off: Int): Any =
-      java.lang.Double.longBitsToDouble(i64(b, off))
   }
 
   val byCode: Map[Char, ElemType] =
@@ -116,13 +102,6 @@ object ElemType {
       }
       zero + scale * stored
     }
-
-    def decode(b: Array[Byte], off: Int): Any = widened match {
-      case Some(ByteType) => decodeByteExact(b, off)
-      case Some(IntegerType) => decodeIntExact(b, off)
-      case Some(LongType) => decodeLongExact(b, off)
-      case _ => decodeDouble(b, off)
-    }
   }
 
   /** Wraps `e` when non-trivial scaling applies (numeric elements only). */
@@ -160,8 +139,6 @@ object ElemType {
     }
     @inline def isBlankAt(b: Array[Byte], off: Int): Boolean =
       storedLong(b, off) == sentinel
-    def decode(b: Array[Byte], off: Int): Any =
-      if (isBlankAt(b, off)) null else inner.decode(b, off)
   }
 
   /** Wraps integer-based image elements with the BLANK sentinel; the
@@ -198,7 +175,6 @@ sealed trait TForm {
   def raw: String
   def byteWidth: Int
   def sparkType: DataType
-  def decode(b: Array[Byte], off: Int): Any
   def supported: Boolean = true
 }
 
@@ -206,18 +182,11 @@ object TForm {
   final case class Scalar(raw: String, elem: ElemType) extends TForm {
     def byteWidth: Int = elem.width
     def sparkType: DataType = elem.sparkType
-    def decode(b: Array[Byte], off: Int): Any = elem.decode(b, off)
   }
 
   final case class Vec(raw: String, elem: ElemType, repeat: Int) extends TForm {
     def byteWidth: Int = elem.width * repeat
     def sparkType: DataType = ArrayType(elem.sparkType, containsNull = true)
-    def decode(b: Array[Byte], off: Int): Any = {
-      val out = new Array[Any](repeat)
-      var i = 0
-      while (i < repeat) { out(i) = elem.decode(b, off + i * elem.width); i += 1 }
-      out
-    }
   }
 
   /** TDIMn = '(d1,d2,…)' — the FITS multi-dimensional array convention
@@ -227,7 +196,7 @@ object TForm {
     * innermost run length d1 (so `TDIM='(3,2)'` reads as
     * `array<array<T>>` with 2 outer rows of 3). Wraps any fixed-width
     * vector form (plain, TSCAL/TZERO-scaled, TNULL-bearing) — `inner`
-    * must decode to a flat Array[Any] and type as a one-level array. */
+    * must type as a one-level array. */
   final case class Md(inner: TForm, dims: Seq[Int]) extends TForm {
     def raw: String = inner.raw
     def byteWidth: Int = inner.byteWidth
@@ -236,17 +205,6 @@ object TForm {
     def sparkType: DataType = dims.tail.foldLeft(
       ArrayType(elemT, containsNull = true): DataType)(
       (t, _) => ArrayType(t, containsNull = true))
-    def decode(b: Array[Byte], off: Int): Any =
-      nest(inner.decode(b, off).asInstanceOf[Array[Any]], dims.toList)
-    private def nest(flat: Array[Any], ds: List[Int]): Array[Any] =
-      ds match {
-        case Nil => flat
-        case _ :: Nil => flat
-        case d1 :: rest =>
-          nest(flat.grouped(d1).map(g =>
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(g): Any)
-            .toArray, rest)
-      }
   }
 
   /** Flat element count of a fixed-width vector form (None = not a
@@ -288,8 +246,6 @@ object TForm {
   final case class Str(raw: String, length: Int) extends TForm {
     def byteWidth: Int = length
     def sparkType: DataType = StringType
-    def decode(b: Array[Byte], off: Int): Any =
-      new String(b, off, length, "UTF-8").trim
   }
 
   /** `nX` bit field: ceil(n/8) raw bytes, surfaced as one binary blob
@@ -298,8 +254,6 @@ object TForm {
   final case class Bits(raw: String, nBits: Int) extends TForm {
     def byteWidth: Int = (nBits + 7) / 8
     def sparkType: DataType = ArrayType(BinaryType, containsNull = true)
-    def decode(b: Array[Byte], off: Int): Any =
-      Array[Any](java.util.Arrays.copyOfRange(b, off, off + byteWidth))
   }
 
   /** TSCALn/TZEROn linear scaling (FITS 4.0 §7.3.2): physical = TZERO +
@@ -337,17 +291,6 @@ object TForm {
     def sparkType: DataType =
       if (isArray) ArrayType(element.sparkType, containsNull = true)
       else element.sparkType
-
-    def decode(b: Array[Byte], off: Int): Any =
-      if (!isArray) element.decode(b, off)
-      else {
-        val out = new Array[Any](rep)
-        var i = 0
-        while (i < rep) {
-          out(i) = element.decode(b, off + i * elem.width); i += 1
-        }
-        out
-      }
   }
 
   /** Wraps `t` in [[Scaled]] when non-trivial scaling applies and the
@@ -364,10 +307,8 @@ object TForm {
   /** Variable-length array descriptor `rPt(max)` / `rQt(max)` (FITS 4.0
     * §7.3.5, beyond reference — it degrades these to an unreadable
     * column): the in-row value is a (count, heapOffset) pair of int32s
-    * (`P`) or int64s (`Q`) pointing into the HDU's heap area. Decoding
-    * therefore needs the heap, which `decode` here cannot see — the
-    * partition reader special-cases this form and preads the referenced
-    * heap span. `PA` surfaces as a variable-length StringType (the
+    * (`P`) or int64s (`Q`) pointing into the HDU's heap area, so the
+    * reader resolves the payload from the heap. `PA` surfaces as a variable-length StringType (the
     * natural FITS encoding for documents); other element codes surface
     * as ArrayType(elem). */
   final case class VarArr(raw: String, elem: ElemType, isQ: Boolean,
@@ -381,9 +322,6 @@ object TForm {
     def descriptor(b: Array[Byte], off: Int): (Long, Long) =
       if (isQ) (ElemType.i64(b, off), ElemType.i64(b, off + 8))
       else (ElemType.i32(b, off).toLong, ElemType.i32(b, off + 4).toLong)
-    def decode(b: Array[Byte], off: Int): Any =
-      throw new UnsupportedOperationException(
-        "variable-length column decode requires heap access")
   }
 
   /** Codes with no decode (variable-length complex `PC`/`PM`, 0-repeat
@@ -394,7 +332,6 @@ object TForm {
     * complex `rC`/`rM` DO decode — see [[parse]].) */
   final case class Unsupported(raw: String, byteWidth: Int = 0) extends TForm {
     def sparkType: DataType = StringType
-    def decode(b: Array[Byte], off: Int): Any = null
     override def supported: Boolean = false
   }
 
@@ -451,19 +388,6 @@ object TForm {
     def raw: String = inner.raw
     def byteWidth: Int = inner.byteWidth
     def sparkType: DataType = inner.sparkType
-    private def scrub(v: Any): Any = v match {
-      // FITS 'B' is unsigned: TNULL is declared in 0-255 terms, so the
-      // signed decoded byte must be compared as its stored value
-      case b: Byte => if ((b & 0xff).toLong == sentinel) null else b
-      case s: Short => if (s.toLong == sentinel) null else s
-      case i: Int => if (i.toLong == sentinel) null else i
-      case l: Long => if (l == sentinel) null else l
-      case other => other
-    }
-    def decode(b: Array[Byte], off: Int): Any = inner.decode(b, off) match {
-      case arr: Array[Any] => arr.map(scrub)
-      case v => scrub(v)
-    }
   }
 
   /** Wraps integer scalar/vector forms with the TNULL sentinel.
@@ -485,18 +409,27 @@ object TForm {
 
   // ------------------------------------------------------- ASCII tables
 
+  /** True when the `width`-byte ASCII field at `off` is all blanks —
+    * a NULL in an ASCII TABLE's numeric columns. */
+  def isBlank(b: Array[Byte], off: Int, width: Int): Boolean = {
+    var i = off
+    while (i < off + width && (b(i) & 0xff) <= 0x20) i += 1
+    i == off + width
+  }
+
+  private def fieldText(b: Array[Byte], off: Int, width: Int): String =
+    new String(b, off, width, java.nio.charset.StandardCharsets.US_ASCII).trim
+
   /** ASCII TABLE integer field `Iw` (FITS 4.0 §7.2.5): right-justified
-    * decimal text, blank field ⇒ SQL NULL. Surfaced as LongType — `w`
-    * can exceed Int range and the standard puts no bound on it. */
+    * decimal text; a blank field ([[isBlank]]) is SQL NULL. Surfaced as
+    * LongType — `w` can exceed Int range and the standard puts no bound
+    * on it. */
   final case class AsciiInt(raw: String, byteWidth: Int) extends TForm {
     def sparkType: DataType = LongType
-    def decode(b: Array[Byte], off: Int): Any = {
-      val s = new String(b, off, byteWidth, "US-ASCII").trim
-      if (s.isEmpty) null
-      else
-        try java.lang.Long.valueOf(java.lang.Long.parseLong(s))
-        catch { case _: NumberFormatException => null }
-    }
+    /** The non-blank field at `off`; NumberFormatException on text that
+      * is not a decimal integer. */
+    def parseLong(b: Array[Byte], off: Int): Long =
+      java.lang.Long.parseLong(fieldText(b, off, byteWidth))
   }
 
   /** ASCII TABLE real field `Fw.d` / `Ew.d` / `Dw.d`: Fortran-style
@@ -506,18 +439,14 @@ object TForm {
   final case class AsciiReal(raw: String, byteWidth: Int, implied: Int)
       extends TForm {
     def sparkType: DataType = DoubleType
-    def decode(b: Array[Byte], off: Int): Any = {
-      val s = new String(b, off, byteWidth, "US-ASCII").trim
-      if (s.isEmpty) return null
-      val e = s.replace('D', 'E').replace('d', 'E')
-      try {
-        val v = java.lang.Double.parseDouble(e)
-        // no explicit point ⇒ rightmost `d` mantissa digits are the
-        // fraction; mantissa/10^d ≡ value/10^d even with an exponent
-        if (implied > 0 && e.indexOf('.') < 0)
-          java.lang.Double.valueOf(v / math.pow(10, implied))
-        else java.lang.Double.valueOf(v)
-      } catch { case _: NumberFormatException => null }
+    /** The non-blank field at `off`; NumberFormatException on text that
+      * is not a number. */
+    def parseDouble(b: Array[Byte], off: Int): Double = {
+      val e = fieldText(b, off, byteWidth).replace('D', 'E').replace('d', 'E')
+      val v = java.lang.Double.parseDouble(e)
+      // no explicit point ⇒ rightmost `d` mantissa digits are the
+      // fraction; mantissa/10^d ≡ value/10^d even with an exponent
+      if (implied > 0 && e.indexOf('.') < 0) v / math.pow(10, implied) else v
     }
   }
 

@@ -35,8 +35,8 @@ object TileCodec {
     * column holds data. `nPix` is THIS tile's pixel count — edge tiles
     * of a 2D tiling are narrower/shorter than the declared ZTILE size.
     * Reads from the coalesced heap window when the payload falls inside
-    * it, else one positioned read. Shared by the connector's reader and
-    * the no-Spark facade. */
+    * it, else one positioned read. The columnar reader's one entry to
+    * tile payloads. */
   def compTileBytes(m: HduMeta.CompImage, rowBuf: Array[Byte],
       base: Int, heapBuf: Array[Byte], heapBase: Long, heapLen: Long,
       in: org.apache.hadoop.fs.FSDataInputStream,

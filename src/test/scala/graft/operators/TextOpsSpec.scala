@@ -254,6 +254,23 @@ class TextOpsSpec extends SparkTestBase {
     assert(rows == Seq(("x", 2), ("y", 1)))
   }
 
+  test("token_tf compiles in whole-stage codegen (no interpreted fallback)") {
+    // a generated-code compile error throws here instead of silently
+    // running the stage interpreted
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      val df = spark.range(2)
+        .select(concat(lit("x y x "), col("id").cast("string")).as("text"))
+        .select(explode(GraftFunctions.token_tf(col("text"))).as("t"))
+        .select(col("t.term"), col("t.tf"))
+      val rows = df.collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+      assert(rows.sorted == Seq(("0", 1), ("1", 1), ("x", 2), ("x", 2),
+        ("y", 1), ("y", 1)))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l =>
+        l.contains("*(") && l.contains("token_tf")), plan)
+    }
+  }
+
   test("text_rarity: rational idf, argmax tie-break, near-hapax count") {
     import spark.implicits._
     // N=3; df: a=3, b=1, c=1, d=1. Scores with (N+1)/(df+1):

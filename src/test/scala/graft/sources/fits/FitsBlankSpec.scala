@@ -12,7 +12,7 @@ import graft.sources.fits.core.{ElemType, FitsStructure, HduMeta}
   * counterpart of the bintable TNULL machinery. The reference parses
   * BLANK but never consumes it (FitsLib.scala:110-115); raw survey
   * images rely on it, so this closes the engine's last null-story gap.
-  * Covers: plain int image read (vectorized e2e + boxed decode), the
+  * Covers: plain int image read (vectorized e2e + facade), the
   * BLANK-before-BSCALE ordering, write→read round trip (plain and
   * RICE_1 tile-compressed), and the ambiguous-sentinel write error. */
 class FitsBlankSpec extends SparkTestBase {
@@ -81,17 +81,21 @@ class FitsBlankSpec extends SparkTestBase {
     assert(line0(0) == 0 && line0(1) == null && line0(2) == 2)
   }
 
-  test("boxed-path decode agrees (elem.decode on the resolved meta)") {
+  test("BLANK element and facade agree on the resolved meta") {
     val file = writeImage(blank = -32768, bzero = 0)
     val p = new Path(file)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val hdus = FitsStructure.scan(fs, p)
     val elem = hdus(1).meta.asInstanceOf[HduMeta.Image].elem
     assert(elem.isInstanceOf[ElemType.BlankElem])
+    val blank = elem.asInstanceOf[ElemType.BlankElem]
     val sentinel = Array[Byte](0x80.toByte, 0x00) // stored -32768
     val regular = Array[Byte](0x00, 0x07)
-    assert(elem.decode(sentinel, 0) == null)
-    assert(elem.decode(regular, 0) == 7.toShort)
+    assert(blank.isBlankAt(sentinel, 0))
+    assert(!blank.isBlankAt(regular, 0) && blank.storedLong(regular, 0) == 7L)
+    // the facade reads the planted sentinel at (0,1) as NULL
+    val line0 = FitsFile.open(file, hdu = 1).rows().next().head
+    assert(line0 == Seq(0.toShort, null, 2.toShort, 3.toShort))
   }
 
   test("null int pixels write a BLANK card and round-trip as NULL") {

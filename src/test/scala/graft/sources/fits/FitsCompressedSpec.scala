@@ -503,7 +503,7 @@ class FitsCompressedSpec extends SparkTestBase {
         null: Array[Byte])), withGzCol = false)
     try {
       // happy path: the no-Spark facade decompresses the same tiles
-      val f = core.FitsFile.open(s"file://$p", hdu = 1)
+      val f = FitsFile.open(s"file://$p", hdu = 1)
       val got = f.rows().toSeq.map(r => r.head.asInstanceOf[Seq[Short]])
       assert(got == lines)
       // hostile path: patch tile 0's descriptor count to 2^31-1 — the
@@ -515,7 +515,7 @@ class FitsCompressedSpec extends SparkTestBase {
       bytes(base + 2) = 0xff.toByte; bytes(base + 3) = 0xff.toByte
       val patched = p.replace(".fits", "-bad.fits")
       Files.write(java.nio.file.Paths.get(patched), bytes)
-      val fBad = core.FitsFile.open(s"file://$patched", hdu = 1)
+      val fBad = FitsFile.open(s"file://$patched", hdu = 1)
       val e = intercept[IllegalArgumentException] { fBad.rows().toSeq }
       assert(e.getMessage.contains("corrupt tile descriptor"), e.getMessage)
       Files.deleteIfExists(java.nio.file.Paths.get(patched))
@@ -593,7 +593,7 @@ class FitsCompressedSpec extends SparkTestBase {
       // LIMIT through the band-aligned planner
       assert(df.orderBy("ImgIndex").limit(4).collect().length == 4)
       // the no-Spark facade assembles the same lines
-      val f = core.FitsFile.open(s"file://$p", hdu = 1)
+      val f = FitsFile.open(s"file://$p", hdu = 1)
       assert(f.nRows == 7)
       val got = f.rows().toSeq
       assert(got.map(_(1)) == (0L until 7L))
@@ -729,7 +729,7 @@ class FitsCompressedSpec extends SparkTestBase {
           s"line $r col $c")
       }
       // the facade agrees
-      val f = core.FitsFile.open(s"file://$p", hdu = 1)
+      val f = FitsFile.open(s"file://$p", hdu = 1)
       val line0 = f.rows().next().head.asInstanceOf[Seq[Any]]
       assert(line0 == (0 until width).map(c =>
         (scales(0) * codes(0)(c) + zeros(0)).toFloat))

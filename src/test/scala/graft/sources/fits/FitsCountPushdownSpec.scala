@@ -223,7 +223,6 @@ class FitsCountPushdownSpec extends SparkTestBase
   }
 
   test("direct-library facade matches connector results") {
-    import graft.sources.fits.core.FitsFile
     val f = FitsFile.open(s"file://$res/test_file.fits", hdu = 1)
     assert(f.nHdus == 3)
     assert(f.nRows == 20000L)

@@ -5,7 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.fits.RefFixtures
+import graft.sources.fits.{FitsFile, RefFixtures}
+import graft.sources.fits.FitsWriteSupport.{card, headerBlock, pad, quoted}
 
 /** Byte-layer unit tests with golden values taken from the reference's
   * own fixtures/tests (FitsLibTest.scala goldens; fixtures from
@@ -117,14 +118,7 @@ class FitsCoreSpec extends AnyFunSuite {
 
   test("first row of HDU1 decodes to NGC0000000") {
     // golden: FitsLibTest.scala:154-171, packageTest.scala:248-253
-    val hdu = scan("test_file.fits")(1)
-    val meta = hdu.meta.asInstanceOf[HduMeta.Bintable]
-    val conf = new Configuration()
-    val path = new Path(s"file://$res/test_file.fits")
-    val in = path.getFileSystem(conf).open(path)
-    val buf = new Array[Byte](meta.rowBytes)
-    try in.readFully(hdu.bounds.dataStart, buf) finally in.close()
-    val row = meta.columns.map(c => c.tform.decode(buf, c.offset))
+    val row = FitsFile.open(s"file://$res/test_file.fits", hdu = 1).rows().next()
     assert(row(0) == "NGC0000000")
     assert(row(3) == 0L) // Index
     assert(row(4).isInstanceOf[Int])
@@ -197,10 +191,20 @@ class FitsCoreSpec extends AnyFunSuite {
     val m3 = TForm.parse("3M")
     assert(m3.supported && m3.byteWidth == 48 &&
       m3.sparkType == ArrayType(DoubleType, true))
-    val buf = java.nio.ByteBuffer.allocate(8)
+    // a one-row table holding that complex value, read through the facade
+    val f = java.nio.file.Files.createTempFile("graft-complex", ".fits")
+    val buf = java.nio.ByteBuffer.allocate(2880)
       .putFloat(1.5f).putFloat(-2.25f).array()
-    assert(c1.decode(buf, 0).asInstanceOf[Array[Any]].toSeq ==
+    java.nio.file.Files.write(f, headerBlock(Seq(card("SIMPLE", "T"),
+      card("BITPIX", "8"), card("NAXIS", "0"), pad("END", 80))) ++
+      headerBlock(Seq(card("XTENSION", quoted("BINTABLE")),
+        card("BITPIX", "8"), card("NAXIS", "2"), card("NAXIS1", "8"),
+        card("NAXIS2", "1"), card("PCOUNT", "0"), card("GCOUNT", "1"),
+        card("TFIELDS", "1"), card("TTYPE1", quoted("c")),
+        card("TFORM1", quoted("C")), pad("END", 80))) ++ buf)
+    try assert(FitsFile.open(f.toString, hdu = 1).rows().next().head ==
       Seq(1.5f, -2.25f))
+    finally java.nio.file.Files.delete(f)
   }
 
   test("variable-length array file walks without desync (PCOUNT heap)") {
